@@ -2,13 +2,14 @@
 
 The reference ships these as a Streamlit app (``/root/reference/app/
 dashboard.py:18-76``); the capability is the queries, exposed here as plain
-DataFrame functions (I2-I6 in SURVEY.md §2).  All are single-table scans or
+DataFrame functions (I2-I5 in SURVEY.md §2; the I6 point lookup is
+``operators.events.q_point_lookup``).  All are single-table scans or
 tiny aggregations — trivially scalable.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -50,8 +51,3 @@ def filter_incidents(
     if status is not None:
         out = out.filter(F.col("status") == status)
     return out
-
-
-def get_run(incidents: DataFrame, run_id: str) -> Row | None:
-    """I6: point lookup of one run (reference ``:62-63``)."""
-    return incidents.filter(F.col("run_id") == run_id).first()

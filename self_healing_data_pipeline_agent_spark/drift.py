@@ -13,9 +13,11 @@ Reference semantics (``/root/reference/src/drift_detector.py``):
 - drift never fails the run — it only reports (``:82-87``).
 
 Spark-first restructuring: the reference profiles one pandas pass per column;
-here the whole profile is **one** ``df.agg`` job (map-side partial aggs, no
-shuffle).  The comparison itself is tiny scalar math driver-side; at 100 TB
-the profiles stay tiny (one row per column) so this never becomes data-sized.
+here the profile costs no Spark job at all — the warehouse write observes
+every numeric column's mean and stddev on the rows it writes
+(``etl.write_warehouse``), and the profile is read off that dict.  The
+comparison itself is tiny scalar math in Python; at 100 TB the profiles
+stay tiny (one row per column) so this never becomes data-sized.
 """
 
 from __future__ import annotations
@@ -26,39 +28,24 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import NumericType
 
 from .contract import Contract
 
 
-def numeric_columns(df: DataFrame) -> list[str]:
-    """Schema-level predicate (reference src/drift_detector.py:12-13)."""
-    return [f.name for f in df.schema.fields if isinstance(f.dataType, NumericType)]
-
-
-def build_profile(df: DataFrame) -> dict[str, Any]:
-    """Per numeric column ``{mean, std}`` over non-nulls, in ONE agg job.
+def build_profile(stats: dict[str, Any]) -> dict[str, Any]:
+    """Per numeric column ``{mean, std}`` over non-nulls, from the
+    statistics the warehouse write observed.
 
     Columns that are entirely null/empty are skipped (reference ``:20-22``
     skips after dropna leaves nothing).  stddev of a single value is 0.0.
     """
-    cols = numeric_columns(df)
-    if not cols:
-        return {"columns": {}}
-    aggs = []
-    for c in cols:
-        aggs.append(F.avg(F.col(c)).alias(f"__mean__{c}"))
-        aggs.append(
-            F.coalesce(F.stddev_samp(F.col(c)), F.lit(0.0)).alias(f"__std__{c}")
-        )
-    row = df.agg(*aggs).collect()[0].asDict()
-    profile: dict[str, Any] = {"columns": {}}
-    for c in cols:
-        mean = row[f"__mean__{c}"]
-        if mean is None:  # all-null column -> no profile entry
-            continue
-        profile["columns"][c] = {"mean": float(mean), "std": float(row[f"__std__{c}"])}
-    return profile
+    return {
+        "columns": {
+            c: {"mean": float(mean), "std": float(stats["stds"][c])}
+            for c, mean in stats["means"].items()
+            if mean is not None  # all-null column -> no profile entry
+        }
+    }
 
 
 def load_profile(path: str | Path) -> dict[str, Any] | None:
@@ -102,14 +89,15 @@ def compare_profiles(
 
 
 def detect_and_update_drift(
-    df: DataFrame, contract: Contract, base_dir: str | Path
+    stats: dict[str, Any], contract: Contract, base_dir: str | Path
 ) -> dict[str, Any]:
-    """Bootstrap-or-compare control flow (reference ``:29-87``).
+    """Bootstrap-or-compare control flow (reference ``:29-87``) over the
+    statistics the warehouse write observed.
 
     Never raises; always returns a drift report dict.
     """
     profile_path = Path(base_dir) / contract.drift_profile_path
-    current = build_profile(df)
+    current = build_profile(stats)
     baseline = load_profile(profile_path)
     if baseline is None:
         save_profile(current, profile_path)

@@ -17,6 +17,10 @@ as one lazy Spark logical plan:
 - The warehouse sink is a full refresh and **runs before DQ** — observable
   ordering: bad data lands in the warehouse even when the run then fails DQ
   (``etl_job.py:72-80`` precedes the DQ call in the runner).
+- The write observes the DQ and drift statistics of the rows it writes
+  (one ``Observation`` in its final stage) and returns them as a plain
+  dict, so a run scans and casts its source exactly once; the DQ gate and
+  the drift check are plain Python functions over that dict.
 
 At scale: the scan is a distributed CSV read; the sink is an overwrite-mode
 parquet table write.  Everything between is a narrow plan (no shuffle).
@@ -25,8 +29,11 @@ parquet table write.  Everything between is a narrow plan (no shuffle).
 from __future__ import annotations
 
 from pathlib import Path
+from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 
 from .contract import Contract
 from .logger import get_logger
@@ -72,8 +79,35 @@ def project_and_cast(df: DataFrame, contract: Contract) -> DataFrame:
     return df.select(*cols)
 
 
-def write_warehouse(df: DataFrame, contract: Contract, base_dir: str | Path) -> str:
-    """Full-refresh sink: overwrite the warehouse table (parquet directory).
+def _stat_metrics(df: DataFrame, contract: Contract) -> list[Column]:
+    """The statistics the DQ gate and the drift check read, as aggregates
+    over ``df``: the row count; the null fraction ``avg(isNull)`` of each
+    declared column present, 0.0 over zero rows (reference
+    src/data_quality_checks.py:48-49); and the mean and sample stddev of
+    each numeric column over its non-nulls, the stddev of one value being
+    0.0, not NULL (src/drift_detector.py:16-26)."""
+    present = [c for c in contract.columns if c in df.columns]
+    numeric = [f.name for f in df.schema.fields if isinstance(f.dataType, NumericType)]
+    return [
+        F.count(F.lit(1)).alias("row_count"),
+        F.struct(*[
+            F.coalesce(F.avg(F.col(c).isNull().cast("int")), F.lit(0.0)).alias(c)
+            for c in present
+        ]).alias("null_fractions"),
+        F.struct(*[F.avg(F.col(c)).alias(c) for c in numeric]).alias("means"),
+        F.struct(*[
+            F.coalesce(F.stddev_samp(F.col(c)), F.lit(0.0)).alias(c) for c in numeric
+        ]).alias("stds"),
+    ]
+
+
+def write_warehouse(
+    df: DataFrame, contract: Contract, base_dir: str | Path
+) -> dict[str, Any]:
+    """Full-refresh sink: overwrite the warehouse table (parquet directory),
+    and return the :func:`_stat_metrics` of the rows written as
+    ``{row_count, null_fractions, means, stds}``, the last three keyed by
+    column.
 
     The reference's truncate+insert into DuckDB (src/etl_job.py:75-80) keeps
     the table schema stable across runs; with a declared contract the
@@ -105,6 +139,11 @@ def write_warehouse(df: DataFrame, contract: Contract, base_dir: str | Path) -> 
             df.repartitionByRange(int(n), *cols) if n
             else df.repartitionByRange(*cols)
         ).sortWithinPartitions(*cols)
+    # The observation sits in the write's own stage: below the range
+    # repartition, that operator's sampling job would feed it too and
+    # every row would be counted twice.
+    observation = Observation()
+    df = df.observe(observation, *_stat_metrics(df, contract))
     if bucket:
         (
             df.write.mode("overwrite")
@@ -123,13 +162,12 @@ def write_warehouse(df: DataFrame, contract: Contract, base_dir: str | Path) -> 
         df.write.mode("overwrite").partitionBy(*partition).parquet(out)
     else:
         df.write.mode("overwrite").parquet(out)
-    return out
+    return {k: v.asDict() if isinstance(v, Row) else v for k, v in observation.get.items()}
 
 
-def run_etl(spark: SparkSession, contract: Contract, base_dir: str | Path) -> DataFrame:
-    """Full ETL for one run; returns the casted DataFrame (lazy plan over the
-    source) for downstream DQ + drift.  Warehouse write happens here, before
-    any DQ gate — matching the reference's observable ordering."""
+def run_etl(spark: SparkSession, contract: Contract, base_dir: str | Path) -> dict[str, Any]:
+    """Full ETL for one run; returns the statistics the warehouse write
+    observed, for the DQ gate and the drift check.  The write happens here,
+    before any DQ gate — matching the reference's observable ordering."""
     df = project_and_cast(read_source(spark, contract, base_dir), contract)
-    write_warehouse(df, contract, base_dir)
-    return df
+    return write_warehouse(df, contract, base_dir)

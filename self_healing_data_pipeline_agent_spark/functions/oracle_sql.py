@@ -46,9 +46,3 @@ def sql_dstd(expr: str) -> str:
     n = f"COUNT({expr})"
     return f"SQRT(({s2} - {s1} * {s1} / {n}) / ({n} - 1))"
 
-
-def sql_dvar_inner(expr: str) -> str:  # exposed for tests
-    s1 = sql_dsum(expr)
-    s2 = sql_dsum_wide(f"({expr}) * ({expr})")
-    n = f"COUNT({expr})"
-    return f"(({s2} - {s1} * {s1} / {n}) / ({n} - 1))"

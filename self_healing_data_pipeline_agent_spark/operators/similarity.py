@@ -43,11 +43,6 @@ _DUCK_COS = (
 )
 
 
-def _cos(a: str, b: str) -> F.Column:
-    """dot/(|a|*|b|) with the exact op structure of ``_DUCK_COS``."""
-    return dot(F.col(a), F.col(b)) / (l2_norm(F.col(a)) * l2_norm(F.col(b)))
-
-
 def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X9 baseline: exact top-k cosine neighbors for the query set.
 

@@ -6,46 +6,23 @@ per-column max-null-fraction, producing a report
 ``{row_count, null_fractions, failed_checks[]}`` and raising
 ``DataQualityError(report)`` if anything failed.
 
-Spark-first restructuring: the reference loops one pandas pass per column;
-here ALL statistics (row count + every null fraction) come from **one**
-``df.agg`` — a single shuffle-free job whose map-side partial aggregation
-makes it scale linearly to 100 TB.  Rule evaluation is then driver-side
-scalar math over that one row.
+The statistics (row count + every null fraction) are not computed here:
+the warehouse write observes them on the rows it writes
+(``etl.write_warehouse``), so the DQ gate costs no Spark job.  Rule
+evaluation is scalar math in Python over that one dict.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 from .contract import Contract
 from .errors import DataQualityError
 
 
-def collect_dq_stats(df: DataFrame, contract: Contract) -> dict[str, Any]:
-    """One aggregation job: total rows + null fraction per declared column
-    present in ``df``.  Null fraction = avg(isNull) ∈ [0,1]
-    (reference src/data_quality_checks.py:48-49)."""
-    present = [c for c in contract.columns if c in df.columns]
-    aggs = [F.count(F.lit(1)).alias("__row_count")]
-    aggs += [
-        F.avg(F.col(c).isNull().cast("int")).alias(f"__nf__{c}") for c in present
-    ]
-    row = df.agg(*aggs).collect()[0].asDict()
-    n = int(row["__row_count"])
-    # avg over zero rows is NULL; define fraction as 0.0 then (vacuous).
-    null_fractions = {
-        c: float(row[f"__nf__{c}"]) if row[f"__nf__{c}"] is not None else 0.0
-        for c in present
-    }
-    return {"row_count": n, "null_fractions": null_fractions}
-
-
-def run_data_quality(df: DataFrame, contract: Contract) -> dict[str, Any]:
-    """Evaluate all DQ rules; returns the report dict (never raises)."""
-    stats = collect_dq_stats(df, contract)
+def run_data_quality(stats: dict[str, Any], contract: Contract) -> dict[str, Any]:
+    """Evaluate all DQ rules over the statistics the warehouse write
+    observed; returns the report dict (never raises)."""
     n, null_fractions = stats["row_count"], stats["null_fractions"]
     failed: list[dict[str, Any]] = []
 
@@ -63,7 +40,7 @@ def run_data_quality(df: DataFrame, contract: Contract) -> dict[str, Any]:
 
     for name, spec in contract.columns.items():
         # Q2 missing declared column (reference :42-45)
-        if name not in df.columns:
+        if name not in null_fractions:
             failed.append(
                 {
                     "check": "missing_column",
@@ -109,10 +86,10 @@ def run_data_quality(df: DataFrame, contract: Contract) -> dict[str, Any]:
     }
 
 
-def enforce_data_quality(df: DataFrame, contract: Contract) -> dict[str, Any]:
+def enforce_data_quality(stats: dict[str, Any], contract: Contract) -> dict[str, Any]:
     """Q5 fail-fast gate: raise DataQualityError carrying the report when any
     check failed (reference :85-89); return the report otherwise."""
-    report = run_data_quality(df, contract)
+    report = run_data_quality(stats, contract)
     if report["failed_checks"]:
         raise DataQualityError(report)
     return report

@@ -54,14 +54,13 @@ def run_single_pipeline(
     spark: SparkSession,
     contract_path: str | Path,
     base_dir: str | Path,
-    description: str = "",
 ) -> dict[str, Any]:
-    """O1 (reference ``:48-61``): one pipeline run.  Raises
-    ``DataQualityError`` on DQ failure (after the warehouse write)."""
+    """O1 (reference ``:48-61``): one pipeline run, one scan of the source.
+    Raises ``DataQualityError`` on DQ failure (after the warehouse write)."""
     contract = load_contract(contract_path)  # reloaded fresh every run (:50)
-    df = run_etl(spark, contract, base_dir)
-    dq_report = enforce_data_quality(df, contract)  # raises on failure
-    drift_report = detect_and_update_drift(df, contract, base_dir)
+    stats = run_etl(spark, contract, base_dir)
+    dq_report = enforce_data_quality(stats, contract)  # raises on failure
+    drift_report = detect_and_update_drift(stats, contract, base_dir)
     return {"dq_report": dq_report, "drift_report": drift_report}
 
 
@@ -110,7 +109,7 @@ def run_demo(
 
     save_contract(contract, contract_path)
     try:
-        reports = run_single_pipeline(spark, contract_path, base_dir, "baseline")
+        reports = run_single_pipeline(spark, contract_path, base_dir)
         record("baseline", "success", description="baseline run on clean data",
                issues=reports["dq_report"])
     except Exception as exc:  # noqa: BLE001 — any failure aborts the demo
@@ -124,7 +123,7 @@ def run_demo(
     save_contract(contract, contract_path)
     issue_report: dict[str, Any] | None = None
     try:
-        run_single_pipeline(spark, contract_path, base_dir, "broken")
+        run_single_pipeline(spark, contract_path, base_dir)
         record("drifted", "success", description="broken data unexpectedly passed")
         return outcomes
     except DataQualityError as dq_err:
@@ -147,7 +146,7 @@ def run_demo(
 
     # STEP 4: re-run with the healed contract (reference :191-223)
     try:
-        reports = run_single_pipeline(spark, contract_path, base_dir, "post_healing")
+        reports = run_single_pipeline(spark, contract_path, base_dir)
         record("post_healing", "healed_success", issues=reports["dq_report"])
     except Exception as exc:  # noqa: BLE001
         record("post_healing", "failed_after_healing",
@@ -235,8 +234,7 @@ def main() -> None:
 
     base = sys.argv[1] if len(sys.argv) > 1 else tempfile.mkdtemp(prefix="spark_graft_demo_")
     cfg = bootstrap_demo_workspace(base)
-    spark = get_spark(app_name="self-healing-demo", master="local[8]",
-                      shuffle_partitions=8)
+    spark = get_spark(app_name="self-healing-demo")
     spark.sparkContext.setLogLevel("ERROR")
     outcomes = run_demo(
         spark, base, cfg,

@@ -20,9 +20,14 @@ SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.
 def spark():
     spark = get_spark(
         app_name="tests",
-        master="local[8]",
+        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
         shuffle_partitions=8,
-        extra_conf={"spark.driver.memory": "6g"},
+        extra_conf={
+            "spark.driver.memory": "6g",
+            # Independent of the core count: spread() repartitions to this
+            # value, and the committed contract fingerprints render it.
+            "spark.default.parallelism": "8",
+        },
     )
     yield spark
     spark.stop()

@@ -13,6 +13,8 @@ from pathlib import Path
 
 import pytest
 import yaml
+from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 
 from self_healing_data_pipeline_agent_spark.contract import Contract, load_contract
 from self_healing_data_pipeline_agent_spark.drift import (
@@ -21,14 +23,18 @@ from self_healing_data_pipeline_agent_spark.drift import (
     detect_and_update_drift,
 )
 from self_healing_data_pipeline_agent_spark.errors import DataQualityError
-from self_healing_data_pipeline_agent_spark.etl import project_and_cast, run_etl
+from self_healing_data_pipeline_agent_spark.etl import (
+    project_and_cast,
+    run_etl,
+    write_warehouse,
+)
 from self_healing_data_pipeline_agent_spark.healing import heal_contract
 from self_healing_data_pipeline_agent_spark.incidents import load_incidents
 from self_healing_data_pipeline_agent_spark.quality import (
     enforce_data_quality,
     run_data_quality,
 )
-from self_healing_data_pipeline_agent_spark.runner import run_demo
+from self_healing_data_pipeline_agent_spark.runner import run_demo, run_single_pipeline
 
 CLEAN_CSV = """customer_id,name,age,country
 1,Asha,25,India
@@ -64,6 +70,31 @@ CONTRACT = {
 }
 
 
+def assert_stats_equal_agg(stats, df, contract):
+    """The statistics a warehouse write observed equal one direct
+    aggregate over the same frame: the row count exactly, null fractions,
+    means and stddevs to 1e-12 relative."""
+    present = [c for c in contract.columns if c in df.columns]
+    numeric = [f.name for f in df.schema.fields if isinstance(f.dataType, NumericType)]
+    row = df.agg(
+        F.count(F.lit(1)),
+        *[F.avg(F.col(c).isNull().cast("int")) for c in present],
+        *[F.avg(c) for c in numeric],
+        *[F.stddev_samp(c) for c in numeric],
+    ).first()
+    values = iter(row[1:])
+    expected = {
+        "null_fractions": {c: next(values) for c in present},
+        "means": {c: next(values) for c in numeric},
+        "stds": {c: next(values) for c in numeric},
+    }
+    assert stats["row_count"] == row[0]
+    for key, direct in expected.items():
+        assert stats[key].keys() == direct.keys()
+        for c, v in direct.items():
+            assert float(stats[key][c]) == pytest.approx(float(v), rel=1e-12), (key, c)
+
+
 @pytest.fixture
 def demo_dir(tmp_path: Path) -> Path:
     raw = tmp_path / "data" / "raw"
@@ -90,7 +121,7 @@ def test_coercing_cast_semantics(spark):
     assert rows == {"x": 1, "y": None, "z": None, "w": 7}
 
 
-def test_missing_column_soft_projection(spark):
+def test_missing_column_soft_projection(spark, tmp_path):
     """Missing declared column drops from projection (no error) and surfaces
     as a missing_column DQ failure."""
     df = spark.createDataFrame([("1",)], ["customer_id"])
@@ -104,12 +135,12 @@ def test_missing_column_soft_projection(spark):
     )
     out = project_and_cast(df, contract)
     assert out.columns == ["customer_id"]
-    report = run_data_quality(out, contract)
+    report = run_data_quality(write_warehouse(out, contract, tmp_path), contract)
     checks = {c["check"] for c in report["failed_checks"]}
     assert "missing_column" in checks
 
 
-def test_dq_rules(spark):
+def test_dq_rules(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, None), (2, 30), (3, None), (4, 40), (5, None)],
         "customer_id int, age int",
@@ -123,34 +154,36 @@ def test_dq_rules(spark):
             "quality": {"row_count_min": 10},
         }
     )
-    report = run_data_quality(df, contract)
+    stats = write_warehouse(df, contract, tmp_path)
+    assert_stats_equal_agg(stats, df, contract)
+    report = run_data_quality(stats, contract)
     by_check = {c["check"]: c for c in report["failed_checks"]}
     assert by_check["row_count"]["observed"] == 5
     assert by_check["max_null_fraction"]["observed"] == pytest.approx(0.6)
     assert report["null_fractions"]["age"] == pytest.approx(0.6)
     assert "required_nulls" not in by_check  # customer_id has no nulls
     with pytest.raises(DataQualityError) as exc_info:
-        enforce_data_quality(df, contract)
+        enforce_data_quality(stats, contract)
     assert exc_info.value.report["failed_checks"]
 
 
-def test_profile_stddev_guards(spark):
+def test_profile_stddev_guards(spark, tmp_path):
     """stddev of n==1 -> 0.0 (not NULL); all-null column skipped."""
     df = spark.createDataFrame(
         [(1, None)], "a int, b int"
     )
-    profile = build_profile(df)
+    profile = build_profile(write_warehouse(df, Contract(), tmp_path))
     assert profile["columns"]["a"] == {"mean": 1.0, "std": 0.0}
     assert "b" not in profile["columns"]
 
 
-def test_profile_matches_reference_golden(spark):
+def test_profile_matches_reference_golden(spark, tmp_path):
     """The reference's committed profile for its v1 data: customer_id
     mean 2.5 / std 1.2909944, age mean 31.75 / std 7.2743843 (ddof=1)."""
     df = spark.createDataFrame(
         [(1, 25), (2, 31), (3, 29), (4, 42)], "customer_id bigint, age bigint"
     )
-    p = build_profile(df)["columns"]
+    p = build_profile(write_warehouse(df, Contract(), tmp_path))["columns"]
     assert p["customer_id"]["mean"] == pytest.approx(2.5)
     assert p["customer_id"]["std"] == pytest.approx(1.2909944487358056)
     assert p["age"]["mean"] == pytest.approx(31.75)
@@ -256,11 +289,82 @@ def test_warehouse_written_before_dq_gate(spark, tmp_path):
                     "age": {"type": "int", "max_null_fraction": 0.1}},
         "quality": {"row_count_min": 1},
     })
-    df = run_etl(spark, contract, tmp_path)
+    stats = run_etl(spark, contract, tmp_path)
     with pytest.raises(DataQualityError):
-        enforce_data_quality(df, contract)
+        enforce_data_quality(stats, contract)
     out = spark.read.parquet(str(tmp_path / "data/warehouse/customers"))
     assert out.count() == 2
+
+
+# Malformed sources, each run through one pipeline run against the demo
+# contract without its age tolerance (so drift runs whenever DQ passes):
+# (CSV text or None for an absent path, failed checks, row count, null
+# fractions, warehouse columns, profiled columns or None if no profile).
+NULLS0 = {"customer_id": 0.0, "name": 0.0, "age": 0.0, "country": 0.0}
+DECLARED = ["customer_id", "name", "age", "country"]
+MALFORMED = {
+    "header_only": (
+        "customer_id,name,age,country\n",
+        {"row_count"}, 0, NULLS0, DECLARED, None,
+    ),
+    "bom_and_spaced_headers": (
+        "\ufeffcustomer_id , name,age ,  country\n1,Asha,25,India\n2,Boris,31,USA\n",
+        set(), 2, NULLS0, DECLARED, ["age", "customer_id"],
+    ),
+    "missing_and_extra_columns": (
+        "customer_id,name,age,email\n1,Asha,25,a@example.com\n",
+        {"missing_column"}, 1,
+        {"customer_id": 0.0, "name": 0.0, "age": 0.0},
+        ["customer_id", "name", "age"], None,
+    ),
+    "all_null_numeric": (
+        "customer_id,name,age,country\n1,Asha,,India\n2,Boris,,USA\n",
+        set(), 2, {**NULLS0, "age": 1.0}, DECLARED, ["customer_id"],
+    ),
+    "missing_source_path": (None, None, None, None, None, None),
+}
+
+
+@pytest.mark.parametrize(
+    "source, failed, rows, null_fractions, warehouse, profiled",
+    list(MALFORMED.values()), ids=list(MALFORMED),
+)
+def test_malformed_input_outcomes(
+    spark, demo_dir, source, failed, rows, null_fractions, warehouse, profiled
+):
+    """Each malformed source has one defined outcome: a DQ failure or a
+    pass with the stated statistics, or a failed baseline for a path that
+    does not exist."""
+    contract_path = demo_dir / "config" / "pipeline_config.yml"
+    if source is None:
+        outcomes = run_demo(
+            spark, demo_dir, contract_path,
+            clean_source="data/raw/absent.csv", broken_source="data/raw/absent.csv",
+        )
+        assert [(o["stage"], o["status"], o["error_type"]) for o in outcomes] == [
+            ("baseline", "failed", "AnalysisException")
+        ]
+        return
+    (demo_dir / "data/raw/malformed.csv").write_text(source, encoding="utf-8")
+    contract = {**CONTRACT, "source_path": "data/raw/malformed.csv"}
+    contract["columns"] = {**CONTRACT["columns"], "age": {"type": "int"}}
+    with open(contract_path, "w") as f:
+        yaml.safe_dump(contract, f, sort_keys=False)
+    try:
+        report = run_single_pipeline(spark, contract_path, demo_dir)["dq_report"]
+    except DataQualityError as err:
+        report = err.report
+    assert {c["check"] for c in report["failed_checks"]} == failed
+    assert report["row_count"] == rows
+    assert report["null_fractions"] == null_fractions
+    written = spark.read.parquet(str(demo_dir / "data/warehouse/customers"))
+    assert written.columns == warehouse
+    assert written.count() == rows
+    profile_path = demo_dir / "data/metadata/reference_profile.json"
+    if profiled is None:
+        assert not profile_path.exists()
+    else:
+        assert sorted(json.loads(profile_path.read_text())["columns"]) == profiled
 
 
 def test_cluster_conf_sizing():
@@ -280,11 +384,7 @@ def test_cluster_conf_sizing():
 def test_bucketed_warehouse_join_avoids_shuffle(spark, tmp_path):
     """A contract with bucket_by writes a hash-bucketed table; joins on
     the bucket key then run with ZERO shuffle exchanges — the co-location
-    property bucketing exists for."""
-    from pyspark.sql import functions as F
-
-    from self_healing_data_pipeline_agent_spark.contract import Contract
-    from self_healing_data_pipeline_agent_spark.etl import write_warehouse
+    property bucketing exists for.  The write observes its statistics."""
     from self_healing_data_pipeline_agent_spark.plans import count_exchanges
 
     df = spark.range(1000).select(
@@ -295,11 +395,11 @@ def test_bucketed_warehouse_join_avoids_shuffle(spark, tmp_path):
         raw={
             "table_name": "bucketed_customers_test",
             "warehouse_path": "wh",
-            "columns": {},
+            "columns": {"customer_id": {"type": "int"}, "segment": {"type": "int"}},
             "bucket_by": {"column": "customer_id", "buckets": 4},
         }
     )
-    write_warehouse(df, contract, tmp_path)
+    assert_stats_equal_agg(write_warehouse(df, contract, tmp_path), df, contract)
     t = spark.table("bucketed_customers_test")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -469,27 +569,25 @@ def test_get_logger_configured_once():
 def test_partitioned_warehouse_prunes_directories(spark, tmp_path):
     """A contract with partition_by writes Hive-style directories; a read
     with a filter on the partition column prunes to that directory
-    (PartitionFilters in the scan, not a data filter)."""
-    from pyspark.sql import functions as F
-
-    from self_healing_data_pipeline_agent_spark.contract import Contract
-    from self_healing_data_pipeline_agent_spark.etl import write_warehouse
+    (PartitionFilters in the scan, not a data filter).  The write observes
+    its statistics."""
     from self_healing_data_pipeline_agent_spark.plans import formatted_plan
 
     df = spark.range(300).select(
         F.col("id").alias("event_id"),
         (F.col("id") % 3).alias("day_bucket"),
-        (F.col("id") * 2).alias("value"),
+        F.when(F.col("id") % 4 != 0, F.col("id") * 2).alias("value"),
     )
     contract = Contract(
         raw={
             "table_name": "part_events_test",
             "warehouse_path": "wh",
-            "columns": {},
+            "columns": {"event_id": {"type": "int"}, "value": {"type": "int"}},
             "partition_by": ["day_bucket"],
         }
     )
-    out = write_warehouse(df, contract, tmp_path)
+    assert_stats_equal_agg(write_warehouse(df, contract, tmp_path), df, contract)
+    out = str(tmp_path / "wh/part_events_test")
     dirs = sorted(p.name for p in (tmp_path / "wh/part_events_test").iterdir()
                   if p.is_dir())
     assert dirs == ["day_bucket=0", "day_bucket=1", "day_bucket=2"]
@@ -504,12 +602,10 @@ def test_partitioned_warehouse_prunes_directories(spark, tmp_path):
 def test_clustered_warehouse_files_have_narrow_spans(spark, tmp_path):
     """cluster_by range-partitions + sorts files so each parquet file's
     footer min/max covers a narrow, non-overlapping span — the zone-map
-    layout that lets scans skip files on a range filter."""
+    layout that lets scans skip files on a range filter.  The write
+    observes its statistics once per row: below the range repartition, its
+    sampling job would count every row a second time."""
     import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from self_healing_data_pipeline_agent_spark.contract import Contract
-    from self_healing_data_pipeline_agent_spark.etl import write_warehouse
 
     df = spark.range(10_000).select(
         F.col("id").alias("order_id"),
@@ -519,11 +615,14 @@ def test_clustered_warehouse_files_have_narrow_spans(spark, tmp_path):
         raw={
             "table_name": "clustered_orders_test",
             "warehouse_path": "wh",
-            "columns": {},
+            "columns": {"order_id": {"type": "int"}, "order_ts": {"type": "int"}},
             "cluster_by": {"columns": ["order_ts"], "partitions": 4},
         }
     )
-    out = write_warehouse(df, contract, tmp_path)
+    stats = write_warehouse(df, contract, tmp_path)
+    assert stats["row_count"] == 10_000
+    assert_stats_equal_agg(stats, df, contract)
+    out = tmp_path / "wh/clustered_orders_test"
     spans = []
     for fp in sorted(Path(out).glob("*.parquet")):
         md = pq.ParquetFile(str(fp)).metadata
