@@ -211,16 +211,17 @@ HEADLINE = [
     # redundant wall-clock: dsir_weights already times the scoring plan
     # and the threshold adds only a sample rank + map filter.
     "ccnet_ppl_thresholds",
-    # r11: the LSH banding study (one cached signature build feeding
-    # three carvings' candidate joins + the exact truth-set join), and
-    # the PQ-ADC ring (4 per-block Lloyd trainings + the map-only
+    # r11: the LSH banding study (one cached signature build whose
+    # three carvings share functions.carving's single tagged join and
+    # (ci, pair) aggregate, which also reads the exact truth set once),
+    # and the PQ-ADC ring (4 per-block Lloyd trainings + the map-only
     # LUT-sum candidate scan + broadcast rerank).
     "minhash_band_tuning",
     "ann_pq_adc_topk",
     "ann_pq_serve",  # serve = production; block Lloyds run at build only
-    # r12: the hyperplane carving study — the same one-build/four-
-    # carvings shape over the embedding LSH index, incl. the multi-probe
-    # variant (probe-side explode only).
+    # r12: the hyperplane carving study — the same shared carving
+    # dataflow over four carvings of the embedding LSH bits, incl. the
+    # multi-probe variant (probe-side explode only).
     "embedding_lsh_tuning",
     # r13: the LSH ANN family pair — build-inline (codes re-derived per
     # run) next to its serving twin, completing the build/serve pairing

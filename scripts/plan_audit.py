@@ -72,11 +72,13 @@ EXPECTED = {
         "same 4-consumer scoring shape as the build"
     ),
     "image_band_tuning": (
-        "BNLJ + shuffles: the exact Hamming truth set is an all-pairs "
-        "popcount join over 40-byte hash rows — quadratic BY DESIGN, "
-        "the study's ground truth (minhash_band_tuning's exact-truth "
-        "role), run at study time only; the three carvings' banded "
-        "candidate joins and the 1-row count crossJoins supply the rest"
+        "BNLJ = the exact Hamming truth set, an all-pairs popcount join "
+        "over 40-byte hash rows — quadratic BY DESIGN, the study's "
+        "ground truth (minhash_band_tuning's exact-truth role), run at "
+        "study time only — plus carving_study's 1-row |truth| broadcast "
+        "crossJoin; the three carvings share one (ci, slot, key) "
+        "candidate join, one (ci, pair) dedup exchange, a broadcast "
+        "truth intersection and one per-carving count"
     ),
     "cross_modal_dedup": (
         "shuffles: the three pair chains' own candidate/verify "
@@ -122,13 +124,13 @@ EXPECTED = {
     "dsir_weights": "BNLJ = 1-row feature-totals broadcast crossJoin; shuffles: (doc_id,b) tf agg + bucket-bounded model aggs + per-doc score agg — the rendered count re-inlines the cached tf frame per consumer",
     "dsir_select": "BNLJ = two 1-row broadcasts (feature totals, scored-doc count); shuffles: dsir_weights' pipeline + the global top-N rank + the 5-row mixture agg, with the cached tf lineage re-inlined per consumer in the rendered count",
     "ccnet_ppl_buckets": "shuffles: the char-LM two-shuffle scoring + the doc_id lang join + ONE per-lang NTILE window + the 15-row tier agg",
-    "minhash_band_tuning": "shuffles: three band-carving candidate joins + the exact-Jaccard truth pipeline + three FULL-JOIN metric aggs composed in ONE union plan; cached sigs/truth frames re-inline per rendering — runtime stages dedupe via the caches, and every join key is (band_sig) or (doc_a, doc_b), never all-pairs",
+    "minhash_band_tuning": "BNLJ = carving_study's 1-row |truth| broadcast crossJoin; shuffles: the exact-Jaccard truth pipeline + the signature build (the cached sigs/truth frames re-inline per rendering — runtime stages dedupe via the caches) + ONE (ci, band, band_sig) candidate join, ONE (ci, pair) dedup exchange and one per-ci count for all three carvings; hits are a broadcast intersection, never all-pairs",
     # r12 operators
     "ann_jl_serve": "BNLJ = tiny broadcast query set scanning the STORED projection table (ann_jl_rerank's layout served from parquet)",
     "minhash_lsh_serve": "shuffles: band join over the stored signature table + the exact-verify pipeline (minhash_lsh_pairs' shape with the sig agg replaced by a parquet scan)",
     "dsir_select_threshold": "BNLJ = 1-row broadcasts (feature totals, sample-quantile threshold); shuffles: dsir_weights' pipeline rendered TWICE (sample path + final agg both consume scored; runtime dedupes via the cached tf frame) + the sample-bounded rank windows",
     "ccnet_ppl_thresholds": "shuffles: the char-LM scoring pipeline rendered twice (sample path + final tier agg; runtime dedupes via the cached tf frame) + the per-lang SAMPLE rank window + the 15-row tier agg",
-    "embedding_lsh_tuning": "BNLJ = the exact-cosine truth pipeline (documented brute-force ground truth, embedding_near_dup's twin); shuffles: four carvings' candidate joins + FULL-JOIN metric aggs in ONE union plan over the cached bit table — every join key is (table, code), never all-pairs",
+    "embedding_lsh_tuning": "BNLJ = carving_study's 1-row |truth| broadcast crossJoin; shuffles: the bit reassembly groupBy over the stored lsh_codes rows (the cached bit table re-inlines per carving in the rendering) + ONE (ci, table, code) candidate join, ONE (ci, pair) dedup exchange and one per-ci count for all four carvings; the truth serves from the stored near_dup_truth table and hits are a broadcast intersection, never all-pairs",
     # r13 operators
     "knn_classify": "BNLJ = tiny broadcast query set against the labeled corpus scan (knn_cosine's layout + a Q-by-labels vote agg)",
     "edit_distance_dedup": "shuffles: signature agg + band candidate join + the two doc_id-keyed text joins feeding the Levenshtein verify (minhash_lsh_pairs' shape with edit-distance verification)",

@@ -200,11 +200,41 @@ def _span_dirty(file: str, start: int, end: int, cache: dict) -> bool:
     return any(a <= end and start <= b for a, b in _worktree_hunks(file, cache))
 
 
+def _head_shifts(file: str, cache: dict[str, list[tuple[int, int]]]) -> list[tuple[int, int]]:
+    """(first worktree line after the hunk, old-minus-new line count) for
+    each uncommitted hunk of ``file``, in file order; cached per file."""
+    if file not in cache:
+        out = _git("diff", "-U0", "HEAD", "--", file).stdout
+        shifts: list[tuple[int, int]] = []
+        for m in re.finditer(
+            r"^@@ -\d+(?:,(\d+))? \+(\d+)(?:,(\d+))? @@", out, re.M
+        ):
+            b = int(m.group(1)) if m.group(1) is not None else 1
+            c = int(m.group(2))
+            d = int(m.group(3)) if m.group(3) is not None else 1
+            # a pure deletion (d == 0) sits after worktree line c
+            shifts.append((c + 1 if d == 0 else c + d, b - d))
+        cache[file] = shifts
+    return cache[file]
+
+
+def _head_line(file: str, line: int, cache: dict) -> int:
+    """Map a worktree line of ``file`` to its line number in HEAD.
+
+    ``inspect`` reads the worktree, ``git log -L`` reads HEAD: without
+    this map an uncommitted edit ABOVE a function points the history
+    query at the wrong lines of HEAD and dates an unrelated change.
+    Lines inside a hunk map approximately; such spans are caught by
+    ``_span_dirty`` anyway."""
+    return line + sum(s for after, s in _head_shifts(file, cache) if line >= after)
+
+
 def audit() -> dict:
     queries = all_queries()
     greens = official_green_records()
     commits = {path: round_commit(path) for _, path in set(greens.values())}
     dirty_cache: dict[str, list[tuple[int, int]]] = {}
+    shift_cache: dict[str, list[tuple[int, int]]] = {}
     report: dict[str, dict] = {}
     for pos, (name, fn) in enumerate(queries.items()):
         entry: dict = {"position": pos, "in_window": pos < WINDOW}
@@ -230,7 +260,11 @@ def audit() -> dict:
             spans.append(ospan)
         status, reason, note = "fresh", None, None
         for file, start, end in spans:
-            touch = last_touch(file, start, end)
+            touch = last_touch(
+                file,
+                _head_line(file, start, shift_cache),
+                _head_line(file, end, shift_cache),
+            )
             if touch is None:
                 # fail CLOSED: a tool that cannot date the span must not
                 # report the green as trustworthy (ADVICE r4 — the old

@@ -26,6 +26,7 @@ from pyspark.sql.types import (
     ArrayType, BinaryType, DoubleType, LongType, StructField, StructType,
 )
 
+from ..functions.carving import carving_study
 from ..sources.tables import load_table
 
 if TYPE_CHECKING:
@@ -1724,13 +1725,12 @@ def q_image_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; the rasters never decode here); the truth set is an all-pairs
     popcount join — quadratic BY DESIGN, the study's ground truth, run
     at study time only, never in the serving path (the same role the
-    exact truth join plays in minhash_band_tuning); each carving's
-    candidates come from its banded equi-join, and recall is one semi
-    join per carving against the cached truth.  All counts exact
-    BIGINTs; recall in 1e-4 units via integer division."""
+    exact truth join plays in minhash_band_tuning); the three carvings'
+    banded keys ride ``carving_study``'s one tagged dataflow, and the
+    report stays lazy with nothing cached.  All counts exact BIGINTs;
+    recall in 1e-4 units via integer division, NULL for an empty truth
+    set (DuckDB's integer division by zero)."""
     hashes = _img_hash_index(spark, sf_dir)
-    xs = [F.col(f"xa{k}") for k in range(IMG_BANDS)]
-    ys = [F.col(f"xb{k}") for k in range(IMG_BANDS)]
     ha = hashes.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"b{k}").alias(f"xa{k}") for k in range(IMG_BANDS)],
@@ -1746,66 +1746,23 @@ def q_image_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         ha.join(hb, F.col("doc_a") < F.col("doc_b"))
         .filter(ham <= IMG_HAM_MAX)
         .select("doc_a", "doc_b")
-        .cache()
     )
-    n_truth = truth.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_truth")
+    keys = [
+        hashes.select(
+            "doc_id", F.posexplode(F.array(*_img_carved_bands(nb)))
+        ).filter(F.col("col") != 0)
+        for _name, nb in IMG_TUNE_CARVINGS
+    ]
+    configs = [{"carving": name, "n_bands": nb}
+               for name, nb in IMG_TUNE_CARVINGS]
+    return carving_study(configs, keys, truth).select(
+        "carving",
+        "n_bands",
+        F.col("n_candidates").alias("n_cand"),
+        "n_truth",
+        F.col("n_hits").alias("n_caught"),
+        F.expr("n_hits * 10000 DIV nullif(n_truth, 0)").alias("recall_units"),
     )
-    rows = []
-    cands = []
-    for name, nb in IMG_TUNE_CARVINGS:
-        keys = hashes.select(
-            "doc_id",
-            F.posexplode(F.array(*_img_carved_bands(nb))).alias("k", "v"),
-        ).filter(F.col("v") != 0)
-        a, b = keys.alias("a"), keys.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.k") == F.col("b.k"))
-                & (F.col("a.v") == F.col("b.v"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .distinct()
-            .cache()
-        )
-        cands.append(cand)
-        caught = truth.join(cand, ["doc_a", "doc_b"], "left_semi")
-        rows.append(
-            cand.agg(F.count(F.lit(1)).cast("bigint").alias("n_cand"))
-            .crossJoin(
-                caught.agg(
-                    F.count(F.lit(1)).cast("bigint").alias("n_caught")
-                )
-            )
-            .crossJoin(n_truth)
-            .select(
-                F.lit(name).alias("carving"),
-                F.lit(nb).cast("bigint").alias("n_bands"),
-                "n_cand",
-                "n_truth",
-                "n_caught",
-                F.expr("n_caught * 10000 DIV n_truth").alias("recall_units"),
-            )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    # the study caches (truth + one candidate table per carving) exist
-    # only to share work across this query's own aggregates; materialize
-    # the 3-row report eagerly and release them (r15 ADVICE: returned
-    # lazy, the 4 cached DataFrames held executor memory for the rest of
-    # the session).  The collect is the report itself — three rows of
-    # BIGINTs, the driver-held-scalar class of collect.
-    data = out.collect()
-    truth.unpersist()
-    for c in cands:
-        c.unpersist()
-    return spark.createDataFrame(data, out.schema)
 
 
 def _img_tuning_oracle() -> str:

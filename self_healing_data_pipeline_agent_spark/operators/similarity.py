@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.carving import carving_study
 from ..functions.stable import davg
 from ..functions.oracle_sql import sql_davg
 from ..functions.veckernels import (
@@ -2495,100 +2496,35 @@ def q_embedding_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``lsh_codes`` signature table (shared with ``ann_lsh_serve``; the
     interpreted hyperplane folds run only at build), and the quadratic
     ground-truth pass serves from the stored ``near_dup_truth`` table.
-    Steady state pays: one 12-byte-row groupBy to reassemble bits, four
-    carving joins moving only (vec_id, table, code) rows keyed on the
-    explicit (table, code) pair — multi-probe explodes the PROBE side
-    only (bits+1 variants) so the corpus side streams by once — and one
-    lazy union of the config rows."""
+    Steady state pays: one 12-byte-row groupBy to reassemble bits, then
+    four carvings moving only (vec_id, table, code) rows through
+    ``carving_study``'s one tagged join on (table, code) — multi-probe
+    explodes the PROBE side only (bits+1 variants) so the corpus side
+    streams by once."""
     bits_df = _lsh_bits_from_codes(_lsh_codes_index(spark, sf_dir)).cache()
     truth = (
-        _near_dup_truth_index(spark, sf_dir)
-        .select("vec_a", "vec_b", F.lit(1).alias("is_true"))
-        .cache()
+        _near_dup_truth_index(spark, sf_dir).select("vec_a", "vec_b").cache()
     )
-    # KB-sized 1-row frame: |truth|, broadcast onto each carving's count
-    # row so n_misses = |truth| - n_hits needs no anti/full join
-    n_truth = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))
-    # r17 (r16 verdict #3 — the single multi-carving pass): the r16 form
-    # ran FOUR per-carving candidate joins, each with its own pair-dedup
-    # exchange and its own count aggregate; a steal-certified
-    # adjudication sequence (2.6-16 s swings at 0% hypervisor steal)
-    # showed the stragglers of four concurrent dedup exchanges ARE this
-    # row's documented variance.  Every carving now rides ONE dataflow
-    # tagged by config id: one union of the carved code sets, one
-    # (ci, table, code) join, one dedup exchange on (ci, pair), one
-    # per-ci count aggregate.  Counts are identical by set algebra —
-    # pairs are deduped within each ci exactly as they were per carving
-    # (r16's broadcast-intersection hit counting is kept verbatim).
-    corpus_parts, probe_parts = [], []
-    for ci, (tables, nbits, multiprobe) in enumerate(EMB_LSH_CONFIGS):
-        coded = _carved_codes(bits_df, tables, nbits).select(
-            F.lit(ci).alias("ci"), "vec_id", "table", "code"
-        )
-        corpus_parts.append(coded)
+    keys, probes = [], []
+    for tables, nbits, multiprobe in EMB_LSH_CONFIGS:
+        coded = _carved_codes(bits_df, tables, nbits)
+        keys.append(coded)
         if multiprobe:
-            probes = [F.col("code")]
-            probes += [
+            flips = [
                 F.col("code").bitwiseXOR(F.lit(1 << b)) for b in range(nbits)
             ]
-            probe_parts.append(coded.select(
-                "ci", F.col("vec_id").alias("vec_a"), "table",
-                F.explode(F.array(*probes)).alias("code"),
-            ))
-        else:
-            probe_parts.append(coded.select(
-                "ci", F.col("vec_id").alias("vec_a"), "table", "code"
-            ))
-    corpus = corpus_parts[0]
-    for c in corpus_parts[1:]:
-        corpus = corpus.unionAll(c)
-    probe = probe_parts[0]
-    for p in probe_parts[1:]:
-        probe = probe.unionAll(p)
-    cand = (
-        probe.join(
-            corpus.select(
-                "ci", F.col("vec_id").alias("vec_b"), "table", "code"
-            ),
-            ["ci", "table", "code"],
-        )
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .dropDuplicates(["ci", "vec_a", "vec_b"])
-    )
-    counts = (
-        cand.join(F.broadcast(truth), ["vec_a", "vec_b"], "left")
-        .groupBy("ci")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_candidates"),
-            F.coalesce(
-                F.sum(F.coalesce(F.col("is_true"), F.lit(0))), F.lit(0)
-            ).cast("bigint").alias("n_hits"),
-        )
-    )
-    # config attributes attach as ci-indexed literal arrays; the left
-    # join from a literal 4-row config frame keeps a zero-candidate
-    # carving's row present (groupBy alone would drop it)
-    cfg = spark.range(len(EMB_LSH_CONFIGS)).select(
-        F.col("id").cast("bigint").alias("ci")
-    )
-    t_arr = F.array(*[F.lit(t).cast("bigint") for t, _b, _m in EMB_LSH_CONFIGS])
-    b_arr = F.array(*[F.lit(b).cast("bigint") for _t, b, _m in EMB_LSH_CONFIGS])
-    m_arr = F.array(*[F.lit(m) for _t, _b, m in EMB_LSH_CONFIGS])
-    return (
-        cfg.join(F.broadcast(counts), "ci", "left")
-        .crossJoin(F.broadcast(n_truth))
-        .select(
-            F.element_at(t_arr, (F.col("ci") + 1).cast("int")).alias("tables"),
-            F.element_at(b_arr, (F.col("ci") + 1).cast("int"))
-            .alias("bits_per_table"),
-            F.element_at(m_arr, (F.col("ci") + 1).cast("int"))
-            .alias("multiprobe"),
-            F.coalesce("n_candidates", F.lit(0)).cast("bigint")
-            .alias("n_candidates"),
-            F.coalesce("n_hits", F.lit(0)).cast("bigint").alias("n_hits"),
-            (F.col("n_truth") - F.coalesce("n_hits", F.lit(0)))
-            .cast("bigint").alias("n_misses"),
-        )
+            coded = coded.select(
+                "vec_id", "table",
+                F.explode(F.array("code", *flips)).alias("code"),
+            )
+        probes.append(coded)
+    configs = [
+        {"tables": t, "bits_per_table": b, "multiprobe": m}
+        for t, b, m in EMB_LSH_CONFIGS
+    ]
+    return carving_study(configs, keys, truth, probes).select(
+        "tables", "bits_per_table", "multiprobe", "n_candidates", "n_hits",
+        (F.col("n_truth") - F.col("n_hits")).alias("n_misses"),
     )
 
 

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.carving import carving_study
 from ..sources.index_store import ensure_index, ensure_model
 from ..sources.tables import load_table, spread
 
@@ -4935,81 +4936,22 @@ def q_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     the S-curve every LSH deployment tunes.  All counts exact BIGINTs.
 
     Scale shape: ONE signature build (cached — the persisted per-
-    snapshot signature table) feeds all three carvings; each candidate
-    join moves only (doc_id, band, band_sig) rows; the truth set is the
-    one quadratic piece and exists only because the study needs ground
-    truth — a production sweep would sample docs instead.  The three
-    metric rows assemble lazily in one union plan (no driver loop
-    actions)."""
+    snapshot signature table) feeds all three carvings, which move only
+    (doc_id, band, band_sig) rows into ``carving_study``'s one tagged
+    dataflow; the truth set is the one quadratic piece and exists only
+    because the study needs ground truth — a production sweep would
+    sample docs instead."""
     sigs = _minhash_sigs(spark, sf_dir)
-    truth = (
-        q_jaccard_pairs(spark, sf_dir)
-        .select("doc_a", "doc_b", F.lit(1).alias("is_true"))
-        .cache()
-    )
-    # r17 (the embedding_lsh_tuning fixes applied to the minhash study —
-    # same shape, same costs):
-    # - hit counting by BROADCAST intersection instead of a full-outer
-    #   sort-merge join per carving (the r16 lsh_tuning change this study
-    #   never received): n_hits = |cand INTERSECT truth|, n_misses =
-    #   |truth| - n_hits — identical by set algebra over two DISTINCT
-    #   pair sets, and the candidate sets never shuffle after dedup;
-    # - ONE multi-carving dataflow tagged by config id instead of three
-    #   independent candidate joins + dedup exchanges (the concurrent
-    #   dedup stragglers were the lsh_tuning row's measured variance).
-    n_truth = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))
-    banded_parts = []
-    for ci, (bands, rows) in enumerate(BAND_CONFIGS):
-        banded_parts.append(
-            sigs.select(
-                F.lit(ci).alias("ci"), "doc_id",
-                F.explode(_band_array(bands, rows)).alias("b"),
-            ).select("ci", "doc_id", "b.band", "b.band_sig")
-        )
-    banded = banded_parts[0]
-    for p in banded_parts[1:]:
-        banded = banded.unionAll(p)
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(b, (F.col("a.ci") == F.col("b.ci"))
-               & (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.band_sig") == F.col("b.band_sig"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.ci").alias("ci"),
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    counts = (
-        cand.join(F.broadcast(truth), ["doc_a", "doc_b"], "left")
-        .groupBy("ci")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_candidates"),
-            F.coalesce(
-                F.sum(F.coalesce(F.col("is_true"), F.lit(0))), F.lit(0)
-            ).cast("bigint").alias("n_hits"),
-        )
-    )
-    # ci-indexed literal config attributes; the left join from a literal
-    # 3-row frame keeps a zero-candidate carving's row present
-    cfg = spark.range(len(BAND_CONFIGS)).select(
-        F.col("id").cast("bigint").alias("ci")
-    )
-    b_arr = F.array(*[F.lit(b).cast("bigint") for b, _r in BAND_CONFIGS])
-    r_arr = F.array(*[F.lit(r).cast("bigint") for _b, r in BAND_CONFIGS])
-    return (
-        cfg.join(F.broadcast(counts), "ci", "left")
-        .crossJoin(F.broadcast(n_truth))
-        .select(
-            F.element_at(b_arr, (F.col("ci") + 1).cast("int")).alias("bands"),
-            F.element_at(r_arr, (F.col("ci") + 1).cast("int"))
-            .alias("rows_per_band"),
-            F.coalesce("n_candidates", F.lit(0)).cast("bigint")
-            .alias("n_candidates"),
-            F.coalesce("n_hits", F.lit(0)).cast("bigint").alias("n_hits"),
-            (F.col("n_truth") - F.coalesce("n_hits", F.lit(0)))
-            .cast("bigint").alias("n_misses"),
-        )
+    truth = q_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b").cache()
+    keys = [
+        sigs.select("doc_id", F.explode(_band_array(bands, rows)).alias("b"))
+        .select("doc_id", "b.band", "b.band_sig")
+        for bands, rows in BAND_CONFIGS
+    ]
+    configs = [{"bands": b, "rows_per_band": r} for b, r in BAND_CONFIGS]
+    return carving_study(configs, keys, truth).select(
+        "bands", "rows_per_band", "n_candidates", "n_hits",
+        (F.col("n_truth") - F.col("n_hits")).alias("n_misses"),
     )
 
 

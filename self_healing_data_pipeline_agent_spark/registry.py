@@ -44,9 +44,21 @@ QUERY_ORDER = [
     #     training, the scored-frame cache, the prune-cache release —
     #     results all re-proven against their oracles at sf0.001+sf0.01
     #     by local parity before shipping, but the official record
-    #     re-earns its green fail-closed) --
+    #     re-earns its green fail-closed).  image_band_tuning joined
+    #     when the three carving studies moved onto functions.carving
+    #     (its fingerprint changed with the other two).
+    #     Not seated: the ~18 attach_pair_cosine consumers (the
+    #     embedding_near_dup*, semantic_dedup, knn_cosine,
+    #     cross_modal_dedup and ann_* rerank/serve rows).  The r17 edit
+    #     there (zero-norm denominators masked to NULL, the _flat2d
+    #     ValueError) lives inside the Arrow kernel, which the plan
+    #     renders by function name only, so none of their contract
+    #     fingerprints moved; every embedding in the sf0.001/0.01/0.1
+    #     testdata has unit norm, so the mask cannot change a value;
+    #     and local parity re-proved them all at sf0.001+sf0.01. --
     "embedding_lsh_tuning",
     "minhash_band_tuning",
+    "image_band_tuning",
     "ccnet_ppl_thresholds",
     "ann_pq_adc_topk",
     "ann_pq_serve",
@@ -101,7 +113,6 @@ QUERY_ORDER = [
     "distinct_counts",
     "doc_fingerprints",
     "drift_compare",
-    "dsir_select_threshold",
     # Below the 50-entry window: everything else carries an r12-r16
     # official green against current testdata and unchanged code.
     # POLICY (r15 verdict #2): streaming_state_metrics stays demoted

@@ -1363,6 +1363,87 @@ def test_embedding_lsh_tuning_s_curve(spark, sf_dir):
         assert 0 <= r["n_hits"] <= r["n_candidates"]
 
 
+def test_carving_study_counts(spark, sf_dir):
+    """The shared study dataflow, on hand-built frames: a config with no
+    candidates keeps its row, a pair colliding in several slots counts
+    once, equal keys in different slots do not collide, a truth pair no
+    config finds is a miss everywhere, and an empty truth gives n_truth
+    0.  Then the image study on the fixture: one truth size for every
+    carving, hits bounded by both sides, recall in 1e-4 units, and no
+    cache left pinned."""
+    from self_healing_data_pipeline_agent_spark.functions.carving import (
+        carving_study,
+    )
+    from self_healing_data_pipeline_agent_spark.operators.multimodal import (
+        q_image_band_tuning,
+    )
+
+    def values(rows: str, cols: str):
+        # SQL VALUES plans JVM-side; a createDataFrame list would make
+        # every scan of these frames a Python-RDD job (~10x slower here)
+        return spark.sql(f"SELECT * FROM VALUES {rows} AS t({cols})")
+
+    keys = [
+        # (1, 2) collides in slots 0 and 1; (1, 3) in slot 2
+        values("(1, 0, 'a'), (2, 0, 'a'), (1, 1, 'b'), (2, 1, 'b'), "
+               "(1, 2, 'e'), (3, 2, 'e'), (4, 0, 'd')", "id, slot, key"),
+        # "q" sits in two different slots: no candidate at all
+        values("(1, 0, 'q'), (2, 1, 'q'), (4, 0, 'x'), (5, 0, 'y')",
+               "id, slot, key"),
+    ]
+    configs = [{"name": "dense", "width": 2}, {"name": "sparse", "width": 1}]
+
+    def run(truth):
+        out = carving_study(configs, keys, truth)
+        assert out.columns == [
+            "name", "width", "n_candidates", "n_hits", "n_truth"
+        ]
+        assert dict(out.dtypes)["width"] == "bigint"
+        return {r["name"]: tuple(r)[2:] for r in out.collect()}
+
+    # (4, 5) is found by no config: a miss (n_truth - n_hits) in both
+    truth = values("(1, 2), (4, 5)", "a, b")
+    assert run(truth) == {"dense": (2, 1, 2), "sparse": (0, 0, 2)}
+    assert run(truth.where("false")) == {"dense": (2, 0, 0), "sparse": (0, 0, 0)}
+
+    jrdds = spark.sparkContext._jsc
+    pinned = jrdds.getPersistentRDDs().size()
+    rows = q_image_band_tuning(spark, sf_dir).collect()
+    assert jrdds.getPersistentRDDs().size() == pinned
+    assert len(rows) == 3 and len({r["n_truth"] for r in rows}) == 1
+    for r in rows:
+        assert 0 <= r["n_caught"] <= min(r["n_cand"], r["n_truth"])
+        assert r["recall_units"] == r["n_caught"] * 10000 // r["n_truth"]
+
+
+def test_image_band_tuning_empty_truth(spark, monkeypatch):
+    """A corpus with no pair within Hamming IMG_HAM_MAX reports recall
+    NULL (the DuckDB twin's integer division by a zero count), not a
+    DIVIDE_BY_ZERO under ANSI mode."""
+    from self_healing_data_pipeline_agent_spark.operators import multimodal
+
+    # 0x00FF/0xFF00, 0x0F0F/0xF0F0, 0x3333/0xCCCC: 48 bits apart; the
+    # shared nonzero band b0 still makes (1, 2) a candidate under the
+    # 4x16 and 8x8 carvings.  SQL VALUES keeps the frame JVM-side.
+    hashes = spark.sql(
+        "SELECT * FROM VALUES (1L, 1L, 255L, 3855L, 13107L), "
+        "(2L, 1L, 65280L, 61680L, 52428L) AS t(doc_id, b0, b1, b2, b3)"
+    )
+    monkeypatch.setattr(
+        multimodal, "_img_hash_index", lambda _spark, _sf_dir: hashes
+    )
+    rows = {
+        r["carving"]: (r["n_cand"], r["n_truth"], r["n_caught"],
+                       r["recall_units"])
+        for r in multimodal.q_image_band_tuning(spark, "unused").collect()
+    }
+    assert rows == {
+        "2x32": (0, 0, 0, None),
+        "4x16": (1, 0, 0, None),
+        "8x8": (1, 0, 0, None),
+    }
+
+
 def test_embedding_near_dup_mp_recall(spark, sf_dir):
     """The multi-probe variant ships the tuning study's conclusion, so
     its guarantees must hold as data: its verified pair set is a

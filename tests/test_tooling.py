@@ -101,6 +101,20 @@ def test_window_audit_span_dirty_intersection():
     assert not wa._span_dirty("other.py", 1, 99, {"other.py": []})
 
 
+def test_window_audit_head_line_mapping():
+    """Worktree lines map back to HEAD lines past uncommitted hunks, so
+    ``git log -L`` dates the function, not whatever HEAD has there."""
+    wa = _load_script("window_audit")
+    # hunk 1: 2 HEAD lines became 5 (worktree 10-14); hunk 2: 4 HEAD
+    # lines deleted after worktree line 30
+    cache = {"mod.py": [(15, -3), (31, 4)]}
+    assert wa._head_line("mod.py", 9, cache) == 9      # above every hunk
+    assert wa._head_line("mod.py", 15, cache) == 12    # below hunk 1
+    assert wa._head_line("mod.py", 30, cache) == 27    # above the deletion
+    assert wa._head_line("mod.py", 31, cache) == 32    # below both
+    assert wa._head_line("other.py", 7, {"other.py": []}) == 7
+
+
 def test_bench_result_line_queries_survive_tail_truncation():
     """The driver archives only the LAST 2000 chars of bench.py's JSON
     line (BENCH_r04.json lost the Spark per-query dict to head
