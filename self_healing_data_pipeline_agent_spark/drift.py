@@ -28,8 +28,10 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from .contract import Contract
+from .sources.tables import local_frame
 
 
 def build_profile(stats: dict[str, Any]) -> dict[str, Any]:
@@ -107,6 +109,16 @@ def detect_and_update_drift(
 
 # --- profile history (the at-scale profile store) ---------------------------
 
+PROFILE_HISTORY_SCHEMA = StructType(
+    [
+        StructField("run_id", StringType(), True),
+        StructField("column", StringType(), True),
+        StructField("mean", DoubleType(), True),
+        StructField("std", DoubleType(), True),
+    ]
+)
+
+
 def profile_to_df(spark, profile: dict[str, Any], run_id: str) -> DataFrame:
     """One row per (run_id, column): the tabular form of a profile.  At
     100 TB the JSON file becomes this append-mode table — profiles from
@@ -116,9 +128,7 @@ def profile_to_df(spark, profile: dict[str, Any], run_id: str) -> DataFrame:
         (run_id, col, float(stats["mean"]), float(stats["std"]))
         for col, stats in profile.get("columns", {}).items()
     ]
-    return spark.createDataFrame(
-        rows, "run_id string, column string, mean double, std double"
-    )
+    return local_frame(spark, rows, PROFILE_HISTORY_SCHEMA)
 
 
 def append_profile_history(

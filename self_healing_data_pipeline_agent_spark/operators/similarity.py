@@ -28,7 +28,7 @@ from ..functions.veckernels import (
 )
 from ..functions.vectors import cosine_similarity, dot, l2_norm
 from ..sources.index_store import ensure_index, ensure_model
-from ..sources.tables import load_table, parquet_row_count, spread
+from ..sources.tables import load_table, local_frame, parquet_row_count, spread
 
 ORACLES: dict[str, str] = {}
 
@@ -1429,9 +1429,7 @@ def q_embedding_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("loading", T.LongType(), False),
         ]
     )
-    return spark.createDataFrame(
-        [(i + 1, v[i]) for i in range(KM_DIM)], schema
-    )
+    return local_frame(spark, [(i + 1, v[i]) for i in range(KM_DIM)], schema)
 
 
 def _pc_oracle() -> str:
@@ -1541,8 +1539,8 @@ def q_embedding_top2_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("loading2", T.LongType(), False),
         ]
     )
-    return spark.createDataFrame(
-        [(i + 1, v1[i], v2[i]) for i in range(KM_DIM)], schema
+    return local_frame(
+        spark, [(i + 1, v1[i], v2[i]) for i in range(KM_DIM)], schema
     )
 
 

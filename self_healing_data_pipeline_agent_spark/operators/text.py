@@ -18,7 +18,7 @@ from pyspark.sql import types as T
 
 from ..functions.carving import carving_study
 from ..sources.index_store import ensure_index, ensure_model
-from ..sources.tables import load_table, spread
+from ..sources.tables import load_table, local_frame, spread
 
 ORACLES: dict[str, str] = {}
 
@@ -3992,7 +3992,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("token", T.StringType(), False),
         T.StructField("cnt", T.LongType(), False),
     ])
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def _bpe_oracle() -> str:
@@ -4490,9 +4490,12 @@ def q_perceptron_lang_clf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the quality-classifier stage of a curation pipeline (fastText-style
     hashed linear model), trained where the data lives."""
     _, traj = _perc_train(spark, sf_dir)
-    return spark.createDataFrame(
-        traj, "rnd bigint, n_mistakes bigint, w_l1 bigint"
-    )
+    schema = T.StructType([
+        T.StructField("rnd", T.LongType(), True),
+        T.StructField("n_mistakes", T.LongType(), True),
+        T.StructField("w_l1", T.LongType(), True),
+    ])
+    return local_frame(spark, traj, schema)
 
 
 def _perc_y() -> F.Column:

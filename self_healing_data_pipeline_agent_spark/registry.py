@@ -46,7 +46,12 @@ QUERY_ORDER = [
     #     by local parity before shipping, but the official record
     #     re-earns its green fail-closed).  image_band_tuning joined
     #     when the three carving studies moved onto functions.carving
-    #     (its fingerprint changed with the other two).
+    #     (its fingerprint changed with the other two).  The last four
+    #     build their result from driver-side rows, now an Arrow
+    #     LocalRelation (sources.tables.local_frame) instead of a
+    #     pickled Python RDD, so their plan fingerprints changed;
+    #     bpe_merges moved up from (c).  streaming_state_metrics'
+    #     fingerprint changed the same way; it stays policy-demoted.
     #     Not seated: the ~18 attach_pair_cosine consumers (the
     #     embedding_near_dup*, semantic_dedup, knn_cosine,
     #     cross_modal_dedup and ann_* rerank/serve rows).  The r17 edit
@@ -70,6 +75,10 @@ QUERY_ORDER = [
     "bm25_prune",
     "bm25_prune_kw",
     "bm25_prune_stats",
+    "bpe_merges",
+    "perceptron_lang_clf",
+    "embedding_top_pc",
+    "embedding_top2_pc",
     # (b) the r11-aged official cohort (r16 verdict #4 — spilled from
     #     BOTH the r15 and r16 windows; their newest official green is
     #     r11 while local parity has re-verified them every session
@@ -105,14 +114,11 @@ QUERY_ORDER = [
     "top_terms",
     "tpch_q1",
     # (c) remaining seats: the oldest r12-aged records, alphabetic
-    #     (ccnet_ppl_thresholds from that cohort holds an (a) seat) --
+    #     (ccnet_ppl_thresholds and bpe_merges from that cohort hold
+    #     (a) seats) --
     "bpe_encode_stats",
-    "bpe_merges",
     "dedup_keep_best",
     "disjunctive_revenue",
-    "distinct_counts",
-    "doc_fingerprints",
-    "drift_compare",
     # Below the 50-entry window: everything else carries an r12-r16
     # official green against current testdata and unchanged code.
     # POLICY (r15 verdict #2): streaming_state_metrics stays demoted

@@ -28,7 +28,7 @@ from pyspark.sql.types import (
     TimestampNTZType, TimestampType,
 )
 
-from ..sources.tables import events_ts_info
+from ..sources.tables import events_ts_info, local_frame
 
 ORACLES: dict[str, str] = {}
 
@@ -1817,7 +1817,7 @@ def streaming_state_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructField("rows_removed_total", LongType(), False),
         StructField("memory_used_bytes_final", LongType(), False),
     ])
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def q_streaming_state_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -484,6 +484,80 @@ def test_streaming_incident_metrics_match_batch(spark, tmp_path):
     assert batch["successes"] == stream_counts["success"] + stream_counts["healed_success"]
 
 
+def test_local_frame_is_a_local_relation(spark):
+    """Driver-built rows come back exactly, under the exact schema
+    (nullability included), from a JVM LocalRelation: no Python RDD."""
+    from pyspark.sql.types import (
+        DoubleType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from self_healing_data_pipeline_agent_spark.sources.tables import local_frame
+
+    schema = StructType([
+        StructField("s", StringType(), True),
+        StructField("n", LongType(), False),
+        StructField("x", DoubleType(), True),
+    ])
+    rows = [("a", 1, 0.5), (None, -(2**62), None), ("", 2**63 - 1, -1e300)]
+    for data in (rows, []):
+        df = local_frame(spark, data, schema)
+        assert df.schema == schema
+        assert StructType.fromJson(json.loads(df._jdf.schema().json())) == schema
+        assert [tuple(r) for r in df.collect()] == data
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
+def test_log_incident_record_and_files(spark, tmp_path):
+    """One record per call, one parquet file per call; NULL error fields
+    read back as "", the dict payloads as their JSON strings; a log that
+    also holds a file from the former pickled-RDD writer reads through
+    load_incidents under the unchanged INCIDENT_SCHEMA."""
+    import pyarrow.parquet as pq
+
+    from self_healing_data_pipeline_agent_spark.incidents import (
+        INCIDENT_SCHEMA,
+        incidents_path,
+        log_incident,
+    )
+
+    path = Path(incidents_path(tmp_path))
+    before = ("r0", "p", "old", "baseline", "success", "", "", "{}", "{}")
+    spark.createDataFrame([before], schema=INCIDENT_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(str(path))
+    issues = {"age": {"null_fraction": 0.6, "limit": 0.2}, "rows": [2, 3, 5]}
+    actions = {"age": {"max_null_fraction": 0.65}}
+    calls = [
+        dict(run_id="r1", stage="drifted", status="failed",
+             error_type=None, error_message=None,
+             issues=issues, healing_actions=actions),
+        dict(run_id="r2", stage="post_healing", status="healed_success",
+             error_type="DataQualityError", error_message="age nulls"),
+    ]
+    for n_files, kw in enumerate(calls, start=2):
+        log_incident(spark, tmp_path, pipeline_name="p", description="d", **kw)
+        assert len(list(path.glob("*.parquet"))) == n_files
+
+    files = sorted(path.glob("*.parquet"))
+    assert len({pq.read_schema(f).remove_metadata() for f in files}) == 1
+    df = load_incidents(spark, tmp_path)
+    assert df.schema == INCIDENT_SCHEMA
+    got = {r["run_id"]: r.asDict() for r in df.collect()}
+    assert got["r0"] == dict(zip(INCIDENT_SCHEMA.names, before))
+    assert (got["r1"]["error_type"], got["r1"]["error_message"]) == ("", "")
+    assert got["r1"]["issues_json"] == json.dumps(issues)
+    assert got["r1"]["healing_actions_json"] == json.dumps(actions)
+    assert (got["r2"]["error_type"], got["r2"]["error_message"]) == (
+        "DataQualityError", "age nulls",
+    )
+    assert (got["r2"]["issues_json"], got["r2"]["healing_actions_json"]) == ("{}", "{}")
+
+
 def test_compaction_merges_small_files(spark, tmp_path):
     """Small-file compaction: 40 tiny files -> size-targeted rewrite,
     same rows; ordered variant keeps disjoint per-file key ranges."""

@@ -115,6 +115,50 @@ def test_window_audit_head_line_mapping():
     assert wa._head_line("other.py", 7, {"other.py": []}) == 7
 
 
+def test_create_dataframe_only_in_local_frame():
+    """``createDataFrame`` over a Python list pickles the rows into a
+    Python RDD, so every job over the frame starts a Python worker.  The
+    package builds driver-side frames through ``sources.tables.
+    local_frame`` alone, which ships them as an Arrow LocalRelation."""
+    import ast
+
+    pkg = os.path.join(REPO, "self_healing_data_pipeline_agent_spark")
+    found = []
+    for root, _, files in os.walk(pkg):
+        for fn in sorted(files):
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(root, fn)
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            parent = {
+                child: node
+                for node in ast.walk(tree)
+                for child in ast.iter_child_nodes(node)
+            }
+            for node in ast.walk(tree):
+                named = (
+                    getattr(node, "attr", None)
+                    or getattr(node, "id", None)
+                    or getattr(node, "value", None)
+                )
+                if named != "createDataFrame":
+                    continue
+                scope = node
+                while scope in parent and not isinstance(
+                    scope, (ast.FunctionDef, ast.AsyncFunctionDef)
+                ):
+                    scope = parent[scope]
+                found.append((
+                    os.path.relpath(path, pkg),
+                    getattr(scope, "name", "<module>"),
+                    node.lineno,
+                ))
+    assert [(p, fn) for p, fn, _ in found] == [
+        (os.path.join("sources", "tables.py"), "local_frame")
+    ], found
+
+
 def test_bench_result_line_queries_survive_tail_truncation():
     """The driver archives only the LAST 2000 chars of bench.py's JSON
     line (BENCH_r04.json lost the Spark per-query dict to head
