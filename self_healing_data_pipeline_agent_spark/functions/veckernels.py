@@ -276,10 +276,12 @@ def lloyd_partial_sums(
     df: DataFrame,
     blocks: list[tuple[int, list[tuple[int, list[int]]]]],
     scale: int,
+    dim: int,
     emb_col: str = "embedding",
 ) -> DataFrame:
     """(block, cid, pos, val): per-batch PARTIAL Lloyd update statistics
-    in LONG form — for every ``(offset, centroids)`` block at once,
+    in LONG form — for every ``(offset, centroids)`` block of the
+    ``dim``-wide embedding at once,
     ``pos = -1`` rows carry the member count and ``pos = 0..subdim-1``
     rows the per-dimension sums of the quantized block slice.  The
     caller groupBys (block, cid, pos) and sums; integer addition is
@@ -293,12 +295,13 @@ def lloyd_partial_sums(
     recompiles EVERY round (measured ~0.3-0.5 s/round at sf0.1 — the
     same plan-compile tax _km_dist_structs' docstring records for the
     unrolled fold); one sum over (block, cid, pos) keys compiles once
-    and is cache-hit by every later round and every later query."""
+    and is cache-hit by every later round and every later query, as long
+    as the session's generated classes fit its codegen cache
+    (``spark.sql.codegen.cache.maxEntries``, pinned in ``get_spark``)."""
     mats = _block_mats(blocks)
     schema = T.StructType.fromDDL(
         "block bigint, cid bigint, pos bigint, val bigint"
     )
-    dim = max(off + C.shape[1] for off, C in mats)
 
     def kern(batches: Iterator) -> Iterator:
         import pyarrow as pa

@@ -1131,7 +1131,7 @@ def _lloyd_rounds(
     dims = [len(block[0][1]) for block in models]
     for _ in range(iters):
         parts = lloyd_partial_sums(
-            src, list(zip(offsets, models)), scale=KM_SCALE
+            src, list(zip(offsets, models)), scale=KM_SCALE, dim=KM_DIM
         )
         rows = (
             parts.groupBy("block", "cid", "pos")

@@ -3,7 +3,9 @@
 Local tests run on ``local[N]``; the same settings are what we would ship to
 a 1000-executor cluster: AQE on (runtime re-planning, skew-join handling,
 partition coalescing), Arrow enabled for the few pandas-UDF paths, and a
-shuffle-partition count that AQE is free to shrink.
+shuffle-partition count that AQE is free to shrink.  The generated-class
+cache is pinned above every measured working set, so warm passes reuse
+compiled classes instead of re-running janino and the JIT on each one.
 """
 
 from __future__ import annotations
@@ -63,6 +65,14 @@ def get_spark(
         # is sort-free and the ingest-appended layout still (correctly)
         # pays its in-task sort.
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+        # Generated-class LRU (static: read once, when the session is
+        # built).  Spark's default of 100 is below query_mix's ~165-class
+        # working set, so every warm pass recompiled ~125 of them.  One
+        # pass over the whole registry at sf0.001 compiles ~2,930 classes
+        # (at sf0.1, bm25_prune_stats alone compiles ~180 a run); 4096 is
+        # the next power of two.  The heal cycle keeps 29.  Counts:
+        # CodegenMetrics.METRIC_COMPILATION_TIME.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         # Local mode hosts all 32 executor threads in the driver JVM —
         # size the heap so cached shingle sets / broadcast builds never

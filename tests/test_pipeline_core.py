@@ -381,6 +381,32 @@ def test_cluster_conf_sizing():
     assert int(small["spark.sql.shuffle.partitions"]) == 80
 
 
+def test_codegen_cache_holds_working_set(spark):
+    """A warm pass over more distinct generated classes than Spark's
+    default cache (100) compiles nothing: the LRU holds the whole set.
+    Each projection inlines its own literals, so it compiles its own
+    classes; at the default cap the second pass recompiled all 240."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096"
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles() -> int:
+        return metrics.METRIC_COMPILATION_TIME().getCount()
+
+    def run_pass() -> None:
+        for i in range(1000, 1120):
+            spark.range(4).selectExpr(f"id * {i} + {i} AS v").write.format(
+                "noop"
+            ).mode("overwrite").save()
+
+    before = compiles()
+    run_pass()
+    first = compiles() - before
+    assert first > 100, first
+    before = compiles()
+    run_pass()
+    assert compiles() - before == 0
+
+
 def test_bucketed_warehouse_join_avoids_shuffle(spark, tmp_path):
     """A contract with bucket_by writes a hash-bucketed table; joins on
     the bucket key then run with ZERO shuffle exchanges — the co-location

@@ -198,7 +198,7 @@ def test_lloyd_partial_sums_totals_match_legacy_update(spark, emb):
         )
     )
     kern = (
-        lloyd_partial_sums(emb, [(0, cents)], scale=KM_SCALE)
+        lloyd_partial_sums(emb, [(0, cents)], scale=KM_SCALE, dim=dim)
         .groupBy("block", "cid", "pos")
         .agg(F.sum("val").alias("v"))
     )
