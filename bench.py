@@ -480,6 +480,8 @@ def _sample_runs(once) -> tuple[list[float], bool]:
       noise stop rule yet records ~3x the steady state (r13 preview:
       perceptron_lang_clf 7.24 s recorded, 2.8 s steady).  Keep sampling
       toward the floor; a warming-only resample is NOT flagged noisy.
+      It is never a data-cache hit: each sample is a registry call, and
+      the registry drops every cached frame when a query starts.
     """
     runs: list[float] = []
     was_noisy = False

@@ -98,9 +98,9 @@ EXPECTED = {
     "semantic_dedup": "BNLJ = broadcast cross join with the 16-centroid codebook",
     # r6/r7/r8 operators (back-filled in r8 when the audit was wired
     # into pytest; each reason matches the shape its plan test pins)
+    "ann_pq_adc_topk": "shuffles: the Lloyd training loop materializes the cached spread embeddings while the plan is built, so simple-mode explain renders that cache's round-robin exchange inline at each of its readers (encode, rerank sides); the run reads the cache",
     "ann_int8_rerank": "BNLJ = broadcast query set + 1-row broadcast codebook crossJoin (pinned by test_plan_shapes)",
     "char_lm_perplexity": "shuffles: bigram tf -> model -> per-doc score aggs of one corpus pipeline; model side is V^2-bounded",
-    "char_lm_model": "shuffles: 6 normally; 7 when the shared tf .cache() is materialized by an earlier query in the session — simple-mode explain then renders the InMemoryRelation's child plan (with its exchanges) inline",
     "curate_corpus": "BNLJ = 1-row corpus-total broadcasts; shuffles: dedup+gates+decontaminate funnel composed in ONE lazy plan",
     "heavy_hitters": "BNLJ = tiny broadcast MG-candidate/threshold frame against the exact recount",
     "kll_quantile_bounds": "BNLJ = 1-row merged-sketch broadcast crossJoin against the probe grid",

@@ -107,7 +107,10 @@ def commit_time(sha: str) -> int | None:
 
 
 def fn_span(fn) -> tuple[str, int, int] | None:
-    """(repo-relative file, first line, last line) of the query function."""
+    """(repo-relative file, first line, last line) of the query function.
+    Registry entries wrap the operator's ``q_*`` function, and
+    ``getsourcefile`` does not follow ``__wrapped__``, so unwrap first."""
+    fn = inspect.unwrap(fn)
     try:
         lines, start = inspect.getsourcelines(fn)
         f = inspect.getsourcefile(fn)

@@ -481,9 +481,11 @@ def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hashing is the hot loop — 8x fewer digests than one-md5-per-seed).
     The min of a uniform hash chunk over a doc's shingle set is a valid
     min-wise signature; fixed-width hex-string min == numeric min, and is
-    engine-portable (no murmur dependency).  Cached: the production
-    banding and the band-tuning study both consume it — at scale this is
-    the per-snapshot signature table you'd persist."""
+    engine-portable (no murmur dependency).  At scale this is the
+    per-snapshot signature table you'd persist (``q_minhash_lsh_serve``
+    stores it).  Uncached: the production banding reads it once, into
+    its own cache; the band-tuning study, which reads it per carving,
+    caches it there."""
     sh = _shingle_df(spark, sf_dir)
     hashed = sh.select(
         "doc_id",
@@ -494,7 +496,7 @@ def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.substring(F.col(_sig_chunk(s)[0]), _sig_chunk(s)[1], 4)).alias(f"sig{s}")
         for s in range(NUM_HASHES)
     ]
-    return hashed.groupBy("doc_id").agg(*sig_aggs).cache()
+    return hashed.groupBy("doc_id").agg(*sig_aggs)
 
 
 def _band_array(bands: int, rows_per_band: int) -> F.Column:
@@ -521,10 +523,8 @@ def _minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     effective key)."""
     sigs = _minhash_sigs(spark, sf_dir)
     bands = _band_array(BANDS, ROWS_PER_BAND)
-    # cached like the shingle set: the signature build (md5 + 16 min-aggs)
-    # is the hot loop, and both the pair query and the clustering query
-    # consume the identical plan — CacheManager shares one materialization.
-    # At scale this is the per-snapshot signature table you'd persist.
+    # cached like the shingle set: the band join reads it on both sides,
+    # and the signature build under it (md5 + 16 min-aggs) is the hot loop
     return (
         sigs.select("doc_id", F.explode(bands).alias("b"))
         .select("doc_id", "b.band", "b.band_sig")
@@ -4135,9 +4135,7 @@ DSIR_SELECT_DIV = 5  # keep the top 1/5 of scored docs
 DSIR_EDGE_EPS = 1e-4
 
 
-def _dsir_tf(
-    spark: SparkSession, sf_dir: str, cache: bool = True
-) -> DataFrame:
+def _dsir_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, b, tf): per-document hashed-feature term
     frequencies — words = maximal [a-z]+ runs of the lowercased text,
     features = unigrams + adjacent-word bigrams, bucket = md5 hex
@@ -4146,10 +4144,8 @@ def _dsir_tf(
     fact-scale shuffle; everything downstream is bucket-bounded
     (<= DSIR_NB rows) or doc-keyed.  The corpus is spread() first: the
     tokenize+md5 map work dominates and must not run single-core on the
-    one-row-group test parquet.
-
-    ``cache=False`` for single-consumer callers (the serve path): a
-    cache with one reader is pure executor-memory cost."""
+    one-row-group test parquet.  Uncached: a caller that reads the frame
+    more than once caches it."""
     df = spread(load_table(spark, sf_dir, "documents"))
     ws = F.filter(
         F.split(F.lower(F.col("text")), "[^a-z]+"), lambda w: w != ""
@@ -4166,14 +4162,13 @@ def _dsir_tf(
     feats = df.select(
         "doc_id", "lang", F.explode(F.concat(ws, bigrams)).alias("feat")
     )
-    tf = (
+    return (
         feats.select(
             "doc_id", "lang", F.substring(F.md5("feat"), 1, 2).alias("b")
         )
         .groupBy("doc_id", "lang", "b")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    return tf.cache() if cache else tf
 
 
 def _dsir_model(tf: DataFrame) -> DataFrame:
@@ -4228,7 +4223,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     [shuffle 2, on doc_id].  The fact stream never joins anything
     larger than the broadcast model — the same two-shuffle layout as
     char_lm_perplexity."""
-    tf = _dsir_tf(spark, sf_dir)
+    tf = _dsir_tf(spark, sf_dir).cache()
     model = _dsir_model(tf)
     return (
         tf.join(F.broadcast(model), "b")
@@ -4514,7 +4509,7 @@ def _perc_train(
     per-round trajectory.  Shared by the trajectory query and the
     stored-model build (``q_perceptron_serve``) so the served weights
     are definitionally the trained weights."""
-    tf = _dsir_tf(spark, sf_dir)
+    tf = _dsir_tf(spark, sf_dir).cache()
     y = _perc_y()
     w: dict[str, int] = {}
     traj: list[tuple[int, int, int]] = []
@@ -4553,10 +4548,9 @@ def _perc_train(
             w[r["b"]] = w.get(r["b"], 0) + int(r["g"])
             if w[r["b"]] == 0:
                 del w[r["b"]]
-    # training is fully materialized (counts + collected updates) — the
-    # feature cache has no further reader, so release it (the r15 ADVICE
-    # dead-cache class; the dsir scoring queries, whose RETURNED lazy
-    # frames still read through their caches, keep theirs)
+    # training is fully materialized (counts + collected updates): the
+    # feature cache's last reader was the final collect, so it goes now
+    # rather than when the next registry query starts
     tf.unpersist()
     return w, traj
 
@@ -4589,7 +4583,7 @@ def q_perceptron_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = {str(k): int(v) for k, v in dict(stored).items()}
     # single consumer (the one scoring aggregate) — no cache
-    tf = _dsir_tf(spark, sf_dir, cache=False)
+    tf = _dsir_tf(spark, sf_dir)
     return (
         tf.select(
             "doc_id",
@@ -4944,7 +4938,7 @@ def q_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     dataflow; the truth set is the one quadratic piece and exists only
     because the study needs ground truth — a production sweep would
     sample docs instead."""
-    sigs = _minhash_sigs(spark, sf_dir)
+    sigs = _minhash_sigs(spark, sf_dir).cache()
     truth = q_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b").cache()
     keys = [
         sigs.select("doc_id", F.explode(_band_array(bands, rows)).alias("b"))
@@ -5675,12 +5669,6 @@ def _bm25_ensure_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     digests and store two copies of the identical postings)."""
     from ..sources.index_store import ensure_index
 
-    # the build's tf cache is unpersisted once ensure_index has
-    # materialized the postings (r15 ADVICE: it otherwise held executor
-    # memory for the rest of the session); empty on the serve path,
-    # where build never runs
-    build_caches: list[DataFrame] = []
-
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
         terms = docs.select("doc_id", F.explode(_tokens_col()).alias("term"))
@@ -5689,7 +5677,6 @@ def _bm25_ensure_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
             .cache()
         )
-        build_caches.append(tf)
         dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
         dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
         scal = dl.agg(
@@ -5702,7 +5689,7 @@ def _bm25_ensure_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
             .crossJoin(F.broadcast(scal))
         )
 
-    post = ensure_index(
+    return ensure_index(
         spark,
         sf_dir,
         "bm25_postings",
@@ -5710,9 +5697,6 @@ def _bm25_ensure_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
         build,
         source_table="documents",
     )
-    for c in build_caches:
-        c.unpersist()
-    return post
 
 
 def q_bm25_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5905,20 +5889,6 @@ ORACLES["bm25_index_refresh"] = ORACLES["bm25_topk"]
 PRUNE_SEED_M = 3  # exactly-scored highest-impact postings per (q, term)
 BM25_KW_TERMS = 4  # keyword-regime query length (rarest-first)
 
-# r16 ADVICE (dead-cache class): _bm25_prune_frames caches three frames
-# per regime that the RETURNED lazy plans read through, so they cannot
-# be released in-query — instead each regime's caches are registered
-# here and unpersisted when the SAME regime is rebuilt (the next
-# invocation's construction), bounding pinned storage to one live
-# invocation per regime instead of growing per call for the session.
-_PRUNE_CACHES: dict[object, list[DataFrame]] = {}
-
-
-def _release_prune_caches(key: object) -> None:
-    for df in _PRUNE_CACHES.pop(key, []):
-        df.unpersist()
-
-
 def _bm25_prune_frames(
     spark: SparkSession, sf_dir: str, kw_terms: int | None = None
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
@@ -5954,7 +5924,6 @@ def _bm25_prune_frames(
     an int = the keyword regime (that many rarest terms, df asc with
     term tiebreak — rarest-first is the standard keyword reduction and
     makes the regime deterministic)."""
-    _release_prune_caches(kw_terms)
     post = _bm25_ensure_postings(spark, sf_dir)
     contrib = post.select("doc_id", "term", _bm25_cu().alias("cu"))
     qterms = post.filter(F.col("doc_id") < BM25_N_QUERIES).select(
@@ -6030,7 +5999,6 @@ def _bm25_prune_frames(
         .select("q_id", "doc_id")
         .distinct()
     )
-    _PRUNE_CACHES[kw_terms] = [qcontrib, scores, ranked]
     return qcontrib, cand, ess, scores
 
 

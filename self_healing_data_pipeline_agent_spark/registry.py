@@ -2,10 +2,21 @@
 exposed as ``(spark, sf_dir) -> DataFrame`` plus its DuckDB oracle SQL.
 
 ``__spark_entry__.py`` (the driver contract) is a thin shim over this.
+
+Cache lifetime.  Every query runs in one shared SparkSession, so one rule
+bounds what a query may leave behind: the data a query caches lives until
+the next registry query starts, when ``spark.catalog.clearCache()`` drops
+it (the wrapper ``_collect`` puts around every entry).  Operators calling
+each other use the raw ``q_*`` module functions, so a nested call never
+clears the caches of the query that called it.  The one release left to
+an operator is a cache whose last reader is a driver action in the same
+function (a training loop's per-round state), which that function
+unpersists after the action, so a loop holds one round at a time.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,7 +71,9 @@ QUERY_ORDER = [
     #     renders by function name only, so none of their contract
     #     fingerprints moved; every embedding in the sf0.001/0.01/0.1
     #     testdata has unit norm, so the mask cannot change a value;
-    #     and local parity re-proved them all at sf0.001+sf0.01. --
+    #     and local parity re-proved them all at sf0.001+sf0.01.
+    #     perceptron_serve's body changed when _dsir_tf lost its cache
+    #     parameter (same plan, same fingerprint). --
     "embedding_lsh_tuning",
     "minhash_band_tuning",
     "image_band_tuning",
@@ -79,6 +92,7 @@ QUERY_ORDER = [
     "perceptron_lang_clf",
     "embedding_top_pc",
     "embedding_top2_pc",
+    "perceptron_serve",
     # (b) the r11-aged official cohort (r16 verdict #4 — spilled from
     #     BOTH the r15 and r16 windows; their newest official green is
     #     r11 while local parity has re-verified them every session
@@ -130,6 +144,17 @@ QUERY_ORDER = [
 
 
 
+def _scoped(fn: QueryFn) -> QueryFn:
+    """``fn`` behind the cache-lifetime rule of the module docstring."""
+
+    @functools.wraps(fn)
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        spark.catalog.clearCache()
+        return fn(spark, sf_dir)
+
+    return query
+
+
 def _collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
     found: dict[str, QueryFn] = {}
     oracles: dict[str, str] = {}
@@ -137,7 +162,7 @@ def _collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
         for attr in dir(mod):
             if attr.startswith("q_"):
                 name = attr[2:]
-                found[name] = getattr(mod, attr)
+                found[name] = _scoped(getattr(mod, attr))
         for name, sql in getattr(mod, "ORACLES", {}).items():
             oracles[name] = sql
     queries: dict[str, QueryFn] = {}

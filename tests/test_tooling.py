@@ -115,6 +115,24 @@ def test_window_audit_head_line_mapping():
     assert wa._head_line("other.py", 7, {"other.py": []}) == 7
 
 
+def test_registry_entries_keep_module_and_source_span():
+    """The registry wraps every query (the cache-lifetime rule), and two
+    tools read through the wrapper: the benchmark's per-layer split keys
+    on ``fn.__module__``, and the window audit dates a query by its
+    source span.  Both must still name the operator, not registry.py."""
+    import inspect
+
+    from self_healing_data_pipeline_agent_spark import registry
+
+    wa = _load_script("window_audit")
+    for name, fn in registry.all_queries().items():
+        assert fn.__module__ == inspect.unwrap(fn).__module__, name
+        assert fn.__module__ != registry.__name__, name
+        defining = inspect.getsourcefile(sys.modules[fn.__module__])
+        span = wa.fn_span(fn)
+        assert span and span[0] == os.path.relpath(defining, REPO), name
+
+
 def test_create_dataframe_only_in_local_frame():
     """``createDataFrame`` over a Python list pickles the rows into a
     Python RDD, so every job over the frame starts a Python worker.  The
