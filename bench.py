@@ -137,8 +137,9 @@ HEADLINE = [
     "embedding_near_dup_mp",
     "embedding_near_dup_serve",
     # r12: the compressed-codec ring — real zlib deflate+inflate and
-    # five-filter PNG coding in two chained Arrow kernels; the genuinely
-    # Python-work-bound multimodal row.
+    # five-filter PNG coding in two chained Arrow kernels, each coding
+    # its whole batch in NumPy (per payload only the chunk walk and
+    # zlib run).
     "multimodal_decode_png",
     # r9: the JL projected-candidate ANN (32-dim brute scan + exact
     # rerank), the Morton-vs-linear layout study (full lineitem scan +

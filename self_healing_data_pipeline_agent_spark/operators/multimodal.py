@@ -914,8 +914,17 @@ FROM sums GROUP BY doc_id
 # unfilters (None/Sub/Up/Average/Paeth).  The encoder deliberately
 # cycles the filter type per row (y % 5) and splits the compressed
 # stream across two IDAT chunks, so every decode path is exercised by
-# every payload; the kernel round-trip-checks the decoded raster against
-# the source bytes and fails loudly on any CRC/inflate/unfilter bug.
+# every payload.  No kernel compares the decoded raster with the source
+# bytes: the DuckDB twin's exact channel sums over the source text check
+# the round trip.  A bad CRC, inflate or filter byte raises in the decode
+# kernel; an unfilter bug shows as a channel-sum mismatch with the twin.
+#
+# Both directions code a whole Arrow batch at once in NumPy: the
+# filters and the None/Sub/Up unfilters are one array expression per
+# filter type across every image, and Average/Paeth (whose prediction
+# reads the pixel just decoded) step over pixel columns on (n, 3)
+# slices.  Only png_parse and zlib run per payload.  Temporaries stay
+# uint8/int16: every intermediate lies in -510..510.
 
 PNG_W = 16
 PNG_H = 16
@@ -923,13 +932,13 @@ PNG_RASTER_BYTES = PNG_W * PNG_H * 3
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    """The Paeth predictor (PNG spec 9.4): nearest of left/up/up-left."""
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
+def _paeth(a, b, c):
+    """The Paeth predictor (PNG spec 9.4), elementwise on int16 arrays:
+    the nearest of left/up/up-left to a + b - c, ties to left, then up."""
+    import numpy as np
+
+    pa, pb, pc = np.abs(b - c), np.abs(a - c), np.abs(a + b - 2 * c)
+    return np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
 
 
 def _png_chunk(typ: bytes, data: bytes) -> bytes:
@@ -942,13 +951,53 @@ def _png_chunk(typ: bytes, data: bytes) -> bytes:
     )
 
 
-def png_encode(raster: bytes, w: int = PNG_W, h: int = PNG_H) -> bytes:
-    """Encode raw RGB bytes as a REAL 8-bit-RGB PNG: per-row filters
-    cycling through all five spec types, zlib-compressed, CRC'd, and the
-    IDAT stream split across two chunks (multi-IDAT is spec-legal and a
-    classic decoder trap)."""
+def png_encode_batch(rasters) -> list[bytes]:
+    """Encode an ``(n, h, w, 3)`` uint8 array of RGB rasters as REAL
+    8-bit-RGB PNGs: per-row filters cycling through all five spec types
+    (row y uses type y % 5), zlib-compressed, CRC'd, and the IDAT stream
+    split across two chunks (multi-IDAT is spec-legal and a classic
+    decoder trap)."""
     import struct
     import zlib
+
+    import numpy as np
+
+    n, h, w, _ = rasters.shape
+    # one zero-padded copy: a zero row above, a zero pixel to the left
+    pad = np.zeros((n, h + 1, w * 3 + 3), np.uint8)
+    pad[:, 1:, 3:] = rasters.reshape(n, h, w * 3)
+    x, up = pad[:, 1:, 3:], pad[:, :-1, 3:]
+    left, upleft = pad[:, 1:, :-3], pad[:, :-1, :-3]
+    filtered = np.empty((n, h, w * 3 + 1), np.uint8)
+    filtered[..., 0] = np.arange(h) % 5
+    body = filtered[..., 1:]
+    # uint8 subtraction wraps mod 256, which is the spec's & 0xFF
+    body[:, 0::5] = x[:, 0::5]
+    body[:, 1::5] = x[:, 1::5] - left[:, 1::5]
+    body[:, 2::5] = x[:, 2::5] - up[:, 2::5]
+    a, b = (v[:, 3::5].astype(np.int16) for v in (left, up))
+    body[:, 3::5] = x[:, 3::5] - ((a + b) >> 1).astype(np.uint8)
+    a, b, c = (v[:, 4::5].astype(np.int16) for v in (left, up, upleft))
+    body[:, 4::5] = x[:, 4::5] - _paeth(a, b, c).astype(np.uint8)
+    head = PNG_SIG + _png_chunk(
+        b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    )
+    tail = _png_chunk(b"IEND", b"")
+    payloads = []
+    for scanlines in filtered:
+        z = zlib.compress(scanlines.tobytes())
+        half = len(z) // 2
+        payloads.append(
+            head + _png_chunk(b"IDAT", z[:half])
+            + _png_chunk(b"IDAT", z[half:]) + tail
+        )
+    return payloads
+
+
+def png_encode(raster: bytes, w: int = PNG_W, h: int = PNG_H) -> bytes:
+    """Encode raw RGB bytes as one PNG: the one-payload case of
+    ``png_encode_batch``."""
+    import numpy as np
 
     if len(raster) != w * h * 3:
         raise ValueError(
@@ -959,45 +1008,9 @@ def png_encode(raster: bytes, w: int = PNG_W, h: int = PNG_H) -> bytes:
             "character inflates the encoded prefix past the pixel count "
             "(tripwired at test_llm_data_ops.py: corpus must stay ASCII)."
         )
-    stride = w * 3
-    prev = bytes(stride)
-    filtered = bytearray()
-    for y in range(h):
-        row = raster[y * stride: (y + 1) * stride]
-        ft = y % 5
-        filtered.append(ft)
-        if ft == 0:
-            filtered += row
-        elif ft == 1:  # Sub
-            filtered += bytes(
-                (row[i] - (row[i - 3] if i >= 3 else 0)) & 0xFF
-                for i in range(stride)
-            )
-        elif ft == 2:  # Up
-            filtered += bytes((row[i] - prev[i]) & 0xFF for i in range(stride))
-        elif ft == 3:  # Average
-            filtered += bytes(
-                (row[i] - (((row[i - 3] if i >= 3 else 0) + prev[i]) >> 1))
-                & 0xFF
-                for i in range(stride)
-            )
-        else:  # Paeth
-            filtered += bytes(
-                (row[i] - _paeth(row[i - 3] if i >= 3 else 0, prev[i],
-                                 prev[i - 3] if i >= 3 else 0)) & 0xFF
-                for i in range(stride)
-            )
-        prev = row
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    z = zlib.compress(bytes(filtered))
-    half = len(z) // 2
-    return (
-        PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", z[:half])
-        + _png_chunk(b"IDAT", z[half:])
-        + _png_chunk(b"IEND", b"")
-    )
+    return png_encode_batch(
+        np.frombuffer(raster, np.uint8).reshape(1, h, w, 3)
+    )[0]
 
 
 def png_parse(payload: bytes) -> tuple[int, int, int, int, bytes]:
@@ -1047,46 +1060,94 @@ def png_parse(payload: bytes) -> tuple[int, int, int, int, bytes]:
     return w, h, depth, ctype, idat
 
 
-def _png_decode(payload: bytes) -> bytes:
-    """Decode 8-bit RGB PNG to raw raster bytes: chunk walk + CRC checks
-    (png_parse), stdlib-zlib inflate, and the five spec unfilters."""
+def _png_unfilter(raw):
+    """``(n, h, 3w + 1)`` scanlines (filter byte first) -> ``(n, h, 3w)``
+    raw bytes.  Rows decode in order, since Up/Average/Paeth read the row
+    above; within a row each filter type present runs once over the
+    images that use it."""
+    import numpy as np
+
+    n, h, width = raw.shape
+    stride, w = width - 1, (width - 1) // 3
+    ftypes = raw[..., 0]
+    bad = np.argwhere(ftypes > 4)
+    if len(bad):
+        i, y = bad[0]
+        raise ValueError(f"bad PNG filter type {ftypes[i, y]} on row {y}")
+    out = np.empty((n, h, stride), np.uint8)
+    prev = np.zeros((n, stride), np.uint8)
+    for y in range(h):
+        kinds = np.unique(ftypes[:, y])
+        for ft in kinds:
+            sel = slice(None) if len(kinds) == 1 else ftypes[:, y] == ft
+            line, up = raw[sel, y, 1:], prev[sel]
+            m = len(line)
+            if ft == 0:
+                row = line
+            elif ft == 1:  # Sub: a running sum per channel, mod 256
+                row = np.cumsum(
+                    line.reshape(m, w, 3), axis=1, dtype=np.uint8
+                ).reshape(m, stride)
+            elif ft == 2:  # Up
+                row = line + up
+            else:  # Average / Paeth read the pixel just decoded
+                x = line.reshape(m, w, 3).astype(np.int16)
+                b = up.reshape(m, w, 3).astype(np.int16)
+                px = np.empty(x.shape, np.uint8)
+                a = c = np.zeros_like(x[:, 0])
+                for col in range(w):
+                    if ft == 3:
+                        pred = (a + b[:, col]) >> 1
+                    else:
+                        pred = _paeth(a, b[:, col], c)
+                    a = px[:, col] = (x[:, col] + pred) & 0xFF
+                    c = b[:, col]
+                row = px.reshape(m, stride)
+            out[sel, y] = row
+        prev = out[:, y]
+    return out
+
+
+def png_decode_batch(payloads) -> list:
+    """Decode 8-bit RGB PNGs: per payload the chunk walk + CRC checks
+    (png_parse) and the stdlib-zlib inflate, then the five spec
+    unfilters over the whole batch.  Returns one ``(rows, rasters)``
+    pair per distinct ``(w, h)``: ``rows`` indexes ``payloads`` and
+    ``rasters`` is the ``(len(rows), h, w, 3)`` uint8 array of theirs.
+    An empty batch returns ``[]``."""
     import zlib
 
-    w, h, _depth, _ctype, idat = png_parse(payload)
-    stride = w * 3
-    try:
-        raw = zlib.decompress(idat)
-    except zlib.error as e:
-        raise ValueError(f"PNG IDAT inflate failed: {e}") from None
-    if len(raw) != h * (stride + 1):
-        raise ValueError(
-            f"PNG scanline data {len(raw)} bytes, want {h * (stride + 1)}"
+    import numpy as np
+
+    groups: dict = {}
+    for i, payload in enumerate(payloads):
+        w, h, _depth, _ctype, idat = png_parse(payload)
+        try:
+            raw = zlib.decompress(idat)
+        except zlib.error as e:
+            raise ValueError(f"PNG IDAT inflate failed: {e}") from None
+        if len(raw) != h * (w * 3 + 1):
+            raise ValueError(
+                f"PNG scanline data {len(raw)} bytes, want {h * (w * 3 + 1)}"
+            )
+        rows, raws = groups.setdefault((w, h), ([], []))
+        rows.append(i)
+        raws.append(raw)
+    out = []
+    for (w, h), (rows, raws) in groups.items():
+        scanlines = np.frombuffer(b"".join(raws), np.uint8).reshape(
+            len(rows), h, w * 3 + 1
         )
-    out = bytearray()
-    prev = bytes(stride)
-    for y in range(h):
-        ft = raw[y * (stride + 1)]
-        line = raw[y * (stride + 1) + 1: (y + 1) * (stride + 1)]
-        row = bytearray(stride)
-        for i in range(stride):
-            x = line[i]
-            left = row[i - 3] if i >= 3 else 0
-            if ft == 0:
-                v = x
-            elif ft == 1:
-                v = x + left
-            elif ft == 2:
-                v = x + prev[i]
-            elif ft == 3:
-                v = x + ((left + prev[i]) >> 1)
-            elif ft == 4:
-                v = x + _paeth(left, prev[i], prev[i - 3] if i >= 3 else 0)
-            else:
-                raise ValueError(f"bad PNG filter type {ft} on row {y}")
-            row[i] = v & 0xFF
-        out += row
-        prev = bytes(row)
-    return bytes(out)
+        rasters = _png_unfilter(scanlines).reshape(len(rows), h, w, 3)
+        out.append((np.array(rows), rasters))
+    return out
+
+
+def _png_decode(payload: bytes) -> bytes:
+    """Decode one PNG to raw raster bytes: the one-payload case of
+    ``png_decode_batch``."""
+    ((_rows, rasters),) = png_decode_batch([payload])
+    return rasters.tobytes()
 
 
 register_codec("png", _png_decode)
@@ -1122,10 +1183,11 @@ def _png_encode_kernel(
     all-ASCII at every SF (test_char_lm_corpus_is_pure_ascii), and the
     check below turns a future corpus change into a named failure here
     instead of a bare raster-length ValueError downstream."""
+    import numpy as np
     import pandas as pd
 
     for pdf in batches:
-        payloads = []
+        raws = []
         for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
             prefix = t[:PNG_RASTER_BYTES].ljust(PNG_RASTER_BYTES)
             raw = prefix.encode("utf-8")
@@ -1136,44 +1198,59 @@ def _png_encode_kernel(
                     "the image ring's character/byte equivalence with its "
                     "DuckDB twin no longer holds for this corpus"
                 )
-            payloads.append(png_encode(raw))
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+            raws.append(raw)
+        rasters = np.frombuffer(b"".join(raws), np.uint8).reshape(
+            len(raws), PNG_H, PNG_W, 3
+        )
+        yield pd.DataFrame(
+            {"doc_id": pdf["doc_id"], "payload": png_encode_batch(rasters)}
+        )
 
 
 def _png_decode_kernel(
     batches: "Iterator[pd.DataFrame]",
 ) -> "Iterator[pd.DataFrame]":
-    """mapInPandas kernel: registry-dispatched PNG decode + exact
-    integer channel sums.  Dimensions come from the parsed IHDR; the
-    raster passes CRC + inflate + unfilter before any stat is read."""
+    """mapInPandas kernel: batch PNG decode + exact integer channel
+    sums.  Dimensions come from the parsed IHDR (png_parse admits only
+    8-bit RGB); every raster passes CRC + inflate + unfilter before any
+    stat is read."""
     import numpy as np
     import pandas as pd
 
     for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, depth, ctype, _ = png_parse(payload)
-            arr = np.frombuffer(decode_payload(payload, "png"), dtype=np.uint8)
-            rows.append(
-                (
-                    doc_id, w, h, depth, ctype, w * h,
-                    int(arr[0::3].sum()), int(arr[1::3].sum()),
-                    int(arr[2::3].sum()),
-                )
+        n = len(pdf)
+        dims = np.zeros((n, 2), np.int64)
+        sums = np.zeros((n, 3), np.int64)
+        for rows, rasters in png_decode_batch(pdf["payload"]):
+            m, h, w, _ = rasters.shape
+            dims[rows] = (w, h)
+            sums[rows] = rasters.reshape(m, h * w, 3).sum(
+                axis=1, dtype=np.int64
             )
-        yield pd.DataFrame(rows, columns=[f.name for f in PNG_SCHEMA.fields])
+        yield pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"],
+                "width": dims[:, 0],
+                "height": dims[:, 1],
+                "bit_depth": np.full(n, 8, np.int64),
+                "color_type": np.full(n, 2, np.int64),
+                "n_pixels": dims[:, 0] * dims[:, 1],
+                "sum_r": sums[:, 0],
+                "sum_g": sums[:, 1],
+                "sum_b": sums[:, 2],
+            }
+        )
 
 
 def q_multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compressed-codec decode ring: each document encodes to a REAL
     8-bit-RGB PNG (zlib-compressed, CRC'd, mixed per-row filters, two
-    IDAT chunks) in one Arrow-batched kernel, then decodes back through
-    the codec registry in a second — signature/CRC validation, IDAT
-    inflate, and all five unfilters on every payload — reporting IHDR
-    dimensions + exact channel sums.  Two chained map-only kernels, no
-    shuffle, batch-bounded memory; at 100 TB the encode stage is
-    replaced by stored blobs and the registry dispatches the same
-    decode."""
+    IDAT chunks) in one Arrow-batched kernel, then decodes the batch
+    back in a second — signature/CRC validation, IDAT inflate, and all
+    five unfilters on every payload — reporting IHDR dimensions + exact
+    channel sums.  Two chained map-only kernels, no shuffle,
+    batch-bounded memory; at 100 TB the encode stage is replaced by
+    stored blobs and the same batch decode reads them."""
     df = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     payloads = df.mapInPandas(
         _png_encode_kernel,
@@ -1238,7 +1315,7 @@ IMG_HASH_SCHEMA = StructType(
 def _img_hash_kernel(
     batches: "Iterator[pd.DataFrame]",
 ) -> "Iterator[pd.DataFrame]":
-    """mapInPandas kernel: PNG payload -> registry decode -> 8x8 block
+    """mapInPandas kernel: PNG payload -> batch decode -> 8x8 block
     dHash, emitted as four 16-bit band values (BIGINT-safe, no sign
     games).  All integer: gray = r+g+b per pixel (no division), block =
     sum of its 2x2 pixel grays, bit(y,x) = block[y][(x+1)%8] >
@@ -1249,23 +1326,22 @@ def _img_hash_kernel(
     import numpy as np
     import pandas as pd
 
+    g = IMG_BLOCK_GRID
+    powers = 1 << np.arange(g * g // IMG_BANDS, dtype=np.int64)
     for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            arr = np.frombuffer(
-                decode_payload(payload, "png"), dtype=np.uint8
-            ).reshape(PNG_H, PNG_W, 3)
-            gray = arr.sum(axis=2, dtype=np.int64)
-            g = IMG_BLOCK_GRID
-            blocks = gray.reshape(g, PNG_H // g, g, PNG_W // g).sum(axis=(1, 3))
-            bits = (np.roll(blocks, -1, axis=1) > blocks).astype(np.int64)
-            flat = bits.reshape(g * g)
-            bands = [
-                int(sum(int(flat[16 * k + j]) << j for j in range(16)))
-                for k in range(IMG_BANDS)
-            ]
-            rows.append((doc_id, *bands))
-        yield pd.DataFrame(rows, columns=[f.name for f in IMG_HASH_SCHEMA.fields])
+        bands = np.zeros((len(pdf), IMG_BANDS), np.int64)
+        for rows, rasters in png_decode_batch(pdf["payload"]):
+            m, h, w, _ = rasters.shape
+            gray = rasters.sum(axis=3, dtype=np.int16)
+            blocks = gray.reshape(m, g, h // g, g, w // g).sum(
+                axis=(2, 4), dtype=np.int32
+            )
+            bits = np.roll(blocks, -1, axis=2) > blocks
+            bands[rows] = bits.reshape(m, IMG_BANDS, -1) @ powers
+        yield pd.DataFrame(
+            {"doc_id": pdf["doc_id"]}
+            | {f"b{k}": bands[:, k] for k in range(IMG_BANDS)}
+        )
 
 
 def _img_hash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1290,7 +1366,7 @@ def _img_hash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _img_hashed(docs: DataFrame) -> DataFrame:
-    """text -> PNG -> registry decode -> dHash bands: the two chained
+    """text -> PNG -> batch decode -> dHash bands: the two chained
     map-only Arrow kernels, shared by the full-corpus artifact build and
     the refresh operator's batch side (ONE code path, so the incremental
     table is hash-identical to a full rebuild by construction)."""
@@ -1310,8 +1386,8 @@ def q_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual near-dup pairs over the IMAGE modality — the dedup
     ring's missing member (X8 covers text shingles, X9 embeddings; the
     X35 codec ring decodes rasters but nothing dedups them): every
-    document encodes to a real PNG, decodes back through the codec
-    registry (CRC + inflate + unfilter — the hash is computed from
+    document encodes to a real PNG, decodes back through the PNG codec
+    (CRC + inflate + unfilter — the hash is computed from
     DECODED bytes, so the round-trip is on the verified path), and hashes
     to a 64-bit block-gradient dHash carried as four 16-bit bands.
 

@@ -903,6 +903,8 @@ def _connected_components(pairs: DataFrame) -> DataFrame:
             converged = True
             break
         prev_sum = new_sum
+    # the returned labels are checkpointed and read no cache
+    edges.unpersist()
     if not converged:
         raise RuntimeError(
             f"connected components did not converge in {CC_MAX_ITERS} rounds"

@@ -73,7 +73,10 @@ QUERY_ORDER = [
     #     testdata has unit norm, so the mask cannot change a value;
     #     and local parity re-proved them all at sf0.001+sf0.01.
     #     perceptron_serve's body changed when _dsir_tf lost its cache
-    #     parameter (same plan, same fingerprint). --
+    #     parameter (same plan, same fingerprint).  The PNG codec now
+    #     codes whole Arrow batches in NumPy (byte-identical payloads,
+    #     same plans); the two rows whose docstrings changed with it
+    #     close this group. --
     "embedding_lsh_tuning",
     "minhash_band_tuning",
     "image_band_tuning",
@@ -93,6 +96,8 @@ QUERY_ORDER = [
     "embedding_top_pc",
     "embedding_top2_pc",
     "perceptron_serve",
+    "multimodal_decode_png",
+    "image_near_dup",
     # (b) the r11-aged official cohort (r16 verdict #4 — spilled from
     #     BOTH the r15 and r16 windows; their newest official green is
     #     r11 while local parity has re-verified them every session

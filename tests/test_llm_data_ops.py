@@ -944,6 +944,269 @@ def test_png_codec_spec_parse():
         )
 
 
+# sha256 of the sf0.001 corpus's PNG payloads in doc_id order, pinned
+# from the per-byte encoder the batch encoder replaced: the batch codec
+# must keep every payload byte (same filtered scanlines, default zlib
+# level, same two-IDAT split).
+PNG_SF0001_PAYLOADS_SHA256 = (
+    "3f8e58d2a1634228183444855dc8221e695e2ff0e6d093f25536d62709b4aa57"
+)
+
+
+def _png_reference_unfilter(raw: bytes, w: int, h: int) -> bytes:
+    """Per-byte scanline unfilter (PNG spec 9.2-9.4), one byte at a time:
+    the reference the batch decoder must agree with."""
+
+    def paeth(a: int, b: int, c: int) -> int:
+        p = a + b - c
+        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+        if pa <= pb and pa <= pc:
+            return a
+        return b if pb <= pc else c
+
+    stride = w * 3
+    out = bytearray()
+    prev = bytes(stride)
+    for y in range(h):
+        ft = raw[y * (stride + 1)]
+        line = raw[y * (stride + 1) + 1: (y + 1) * (stride + 1)]
+        row = bytearray(stride)
+        for i in range(stride):
+            x = line[i]
+            left = row[i - 3] if i >= 3 else 0
+            if ft == 0:
+                v = x
+            elif ft == 1:
+                v = x + left
+            elif ft == 2:
+                v = x + prev[i]
+            elif ft == 3:
+                v = x + ((left + prev[i]) >> 1)
+            elif ft == 4:
+                v = x + paeth(left, prev[i], prev[i - 3] if i >= 3 else 0)
+            else:
+                raise ValueError(f"bad PNG filter type {ft} on row {y}")
+            row[i] = v & 0xFF
+        out += row
+        prev = bytes(row)
+    return bytes(out)
+
+
+def _png_from_scanlines(raw: bytes, w: int, h: int) -> bytes:
+    import struct
+    import zlib
+
+    from self_healing_data_pipeline_agent_spark.operators.multimodal import (
+        PNG_SIG,
+        _png_chunk,
+    )
+
+    return (
+        PNG_SIG
+        + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
+        + _png_chunk(b"IDAT", zlib.compress(raw))
+        + _png_chunk(b"IEND", b"")
+    )
+
+
+def _batch_rasters(payloads) -> list[bytes]:
+    """png_decode_batch's shape groups, back in payload order."""
+    from self_healing_data_pipeline_agent_spark.operators.multimodal import (
+        png_decode_batch,
+    )
+
+    out = [None] * len(payloads)
+    for rows, rasters in png_decode_batch(payloads):
+        for i, raster in zip(rows, rasters):
+            out[i] = raster.tobytes()
+    return out
+
+
+def _sf0001_documents(sf_dir):
+    import os
+
+    import pyarrow.parquet as pq
+
+    sf0001 = os.path.join(os.path.dirname(sf_dir), "sf0.001")
+    return (
+        pq.read_table(f"{sf0001}/documents.parquet", columns=["doc_id", "text"])
+        .to_pandas()
+        .sort_values("doc_id", ignore_index=True)
+    )
+
+
+def test_png_batch_encode_keeps_payload_bytes(sf_dir):
+    """The batch encoder writes the very bytes the per-byte encoder
+    wrote, over the whole sf0.001 corpus in one Arrow batch."""
+    import hashlib
+
+    from self_healing_data_pipeline_agent_spark.operators.multimodal import (
+        _png_encode_kernel,
+    )
+
+    docs = _sf0001_documents(sf_dir)
+    (enc,) = list(_png_encode_kernel(iter([docs])))
+    assert list(enc["doc_id"]) == list(docs["doc_id"])
+    digest = hashlib.sha256(b"".join(enc["payload"])).hexdigest()
+    assert digest == PNG_SF0001_PAYLOADS_SHA256
+
+
+def test_png_batch_unfilter_matches_per_byte_reference():
+    """Random scanlines whose per-row filter types differ from image
+    to image, in one batch that mixes two (w, h) shapes: the batch
+    decoder agrees byte for byte with the per-byte reference; random
+    (non-ASCII) rasters round-trip through the batch encoder."""
+    import random
+    import zlib
+
+    import numpy as np
+
+    from self_healing_data_pipeline_agent_spark.operators.multimodal import (
+        png_decode_batch,
+        png_encode_batch,
+        png_parse,
+    )
+
+    rng = random.Random(11)
+    payloads = []
+    for _ in range(120):
+        w, h = rng.choice([(16, 16), (5, 3)])
+        raw = b"".join(
+            bytes([rng.randrange(5)])
+            + bytes(rng.randrange(256) for _ in range(w * 3))
+            for _ in range(h)
+        )
+        payloads.append(_png_from_scanlines(raw, w, h))
+    assert len(png_decode_batch(payloads)) == 2
+    want = []
+    for p in payloads:
+        w, h, _, _, idat = png_parse(p)
+        want.append(_png_reference_unfilter(zlib.decompress(idat), w, h))
+    assert _batch_rasters(payloads) == want
+
+    rasters = np.frombuffer(
+        bytes(rng.randrange(256) for _ in range(40 * 16 * 16 * 3)), np.uint8
+    ).reshape(40, 16, 16, 3)
+    assert _batch_rasters(png_encode_batch(rasters)) == [
+        r.tobytes() for r in rasters
+    ]
+
+
+def test_png_doc_decodes_alike_alone_and_in_batch(sf_dir):
+    """A document's raster, channel sums and dHash bands do not
+    depend on the batch it is decoded in — image_index_refresh's
+    invariant (the refreshed table is hash-identical to a full
+    rebuild)."""
+    import pandas as pd
+
+    from self_healing_data_pipeline_agent_spark.operators.multimodal import (
+        _img_hash_kernel,
+        _png_decode,
+        _png_decode_kernel,
+        _png_encode_kernel,
+    )
+
+    docs = _sf0001_documents(sf_dir)
+    (enc,) = list(_png_encode_kernel(iter([docs])))
+    batch_rasters = _batch_rasters(list(enc["payload"]))
+    (sums,) = list(_png_decode_kernel(iter([enc])))
+    (bands,) = list(_img_hash_kernel(iter([enc])))
+    for i in range(0, len(enc), 37):
+        one = enc.iloc[[i]].reset_index(drop=True)
+        assert _png_decode(one["payload"][0]) == batch_rasters[i]
+        for kernel, whole in (
+            (_png_decode_kernel, sums), (_img_hash_kernel, bands)
+        ):
+            (alone,) = list(kernel(iter([one])))
+            pd.testing.assert_frame_equal(
+                alone, whole.iloc[[i]].reset_index(drop=True)
+            )
+
+
+def test_png_batch_rejects_a_corrupt_payload_mid_batch():
+    """One bad payload among good ones fails the whole batch with the
+    same ValueError the one-payload codec raises."""
+    import struct
+    import zlib
+
+    import numpy as np
+
+    from self_healing_data_pipeline_agent_spark.operators.multimodal import (
+        PNG_SIG,
+        _png_chunk,
+        png_decode_batch,
+        png_encode_batch,
+    )
+
+    good = png_encode_batch(
+        np.arange(4 * 16 * 16 * 3, dtype=np.uint32).astype(np.uint8).reshape(
+            4, 16, 16, 3
+        )
+    )
+    p = good[0]
+    crc = bytearray(p)
+    crc[60] ^= 1
+    ihdr8 = struct.pack(">IIBBBBB", 16, 16, 8, 2, 0, 0, 0)
+    ihdr16 = struct.pack(">IIBBBBB", 16, 16, 16, 2, 0, 0, 0)
+    iend = _png_chunk(b"IEND", b"")
+    bad_filter = b"".join(bytes([9]) + bytes(16 * 3) for _ in range(16))
+    cases = [
+        ("CRC", bytes(crc)),
+        ("not a PNG", b"XXXX" + p[4:]),
+        ("truncated", p[:-8]),
+        ("truncated", p[:-2]),
+        (
+            "unsupported",
+            PNG_SIG + _png_chunk(b"IHDR", ihdr16),
+        ),
+        (
+            "inflate",
+            PNG_SIG + _png_chunk(b"IHDR", ihdr8)
+            + _png_chunk(b"IDAT", b"not-a-zlib-stream") + iend,
+        ),
+        (
+            "scanline data",
+            PNG_SIG + _png_chunk(b"IHDR", ihdr8)
+            + _png_chunk(b"IDAT", zlib.compress(b"short")) + iend,
+        ),
+        (
+            "bad PNG filter type 9 on row 0",
+            _png_from_scanlines(bad_filter, 16, 16),
+        ),
+    ]
+    for match, bad in cases:
+        with pytest.raises(ValueError, match=match):
+            png_decode_batch(good[:2] + [bad] + good[2:])
+
+
+def test_png_batch_codec_empty_batch():
+    """An empty Arrow batch codes to an empty frame with the kernels'
+    columns."""
+    import numpy as np
+    import pandas as pd
+
+    from self_healing_data_pipeline_agent_spark.operators.multimodal import (
+        IMG_HASH_SCHEMA,
+        PNG_SCHEMA,
+        _img_hash_kernel,
+        _png_decode_kernel,
+        _png_encode_kernel,
+        png_decode_batch,
+        png_encode_batch,
+    )
+
+    assert png_decode_batch([]) == []
+    assert png_encode_batch(np.zeros((0, 16, 16, 3), np.uint8)) == []
+    docs = pd.DataFrame({"doc_id": pd.Series([], dtype="int64"), "text": []})
+    (enc,) = list(_png_encode_kernel(iter([docs])))
+    assert list(enc.columns) == ["doc_id", "payload"] and enc.empty
+    for kernel, schema in (
+        (_png_decode_kernel, PNG_SCHEMA), (_img_hash_kernel, IMG_HASH_SCHEMA)
+    ):
+        (out,) = list(kernel(iter([enc])))
+        assert list(out.columns) == schema.fieldNames() and out.empty
+
+
 def test_wav_codec_spec_parse():
     """The WAV codec is the registry's real-container AUDIO path: valid
     RIFF/WAVE decodes to exactly its PCM bytes; wrong magic, truncation,

@@ -13,10 +13,11 @@ from __future__ import annotations
 import random
 
 import duckdb
+import pytest
 
 from perfbench.mixes import value_hash
 from self_healing_data_pipeline_agent_spark import registry
-from self_healing_data_pipeline_agent_spark.operators import relational
+from self_healing_data_pipeline_agent_spark.operators import relational, text
 from self_healing_data_pipeline_agent_spark.sources.tables import TABLE_NAMES
 
 # Every registry query that still holds cached data after it has run:
@@ -33,7 +34,7 @@ CACHING_QUERIES = [
     "dsir_weights", "dup_cluster_stats", "dup_ngram_coverage",
     "duplicate_clusters", "edit_distance_dedup", "embedding_lsh_tuning",
     "embedding_near_dup_lsh", "embedding_near_dup_mp", "graph_pagerank",
-    "graph_pagerank_by_region", "image_dup_clusters", "incremental_dedup",
+    "graph_pagerank_by_region", "incremental_dedup",
     "jaccard_pairs", "kmeans_embeddings", "leakage_safe_split",
     "mad_outlier_profile", "minhash_band_tuning", "minhash_lsh_pairs",
     "minhash_lsh_serve", "ngram_novelty", "pq_codebook",
@@ -84,3 +85,23 @@ def test_caching_queries_are_order_independent(spark, sf_dir):
             assert dict(spark.conf.getAll) == conf, name
     finally:
         con.close()
+
+
+def test_connected_components_releases_its_edge_cache(spark, monkeypatch):
+    """A direct ``_connected_components`` call (no registry scope around
+    it) leaves no cached data behind, whether the propagation converges
+    or hits the iteration cap: the labels it returns are checkpointed and
+    read no cache."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (5, 6)], "doc_a long, doc_b long"
+    )
+    labels = text._connected_components(pairs).collect()
+    got = {r.doc_id: r.cluster_id for r in labels}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5}
+    assert cm.isEmpty()
+    monkeypatch.setattr(text, "CC_MAX_ITERS", 1)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        text._connected_components(pairs)
+    assert cm.isEmpty()
