@@ -177,6 +177,37 @@ def test_create_dataframe_only_in_local_frame():
     ], found
 
 
+def test_sessions_are_built_only_by_get_spark():
+    """``session.get_spark`` starts the driver JVM from the class-data
+    archive through ``spark.driver.defaultJavaOptions``.  No product entry
+    point builds a session another way, and none sets
+    ``spark.driver.extraJavaOptions``, so every one gets the archive and
+    keeps the whole of a caller's option string."""
+    import ast
+
+    paths = [os.path.join(REPO, f) for f in ("app.py", "bench.py", "__spark_entry__.py")]
+    for sub in ("self_healing_data_pipeline_agent_spark", "scripts"):
+        for root, _, files in os.walk(os.path.join(REPO, sub)):
+            paths += [os.path.join(root, f) for f in sorted(files) if f.endswith(".py")]
+    builders, java_opts = [], []
+    for path in paths:
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        rel = os.path.relpath(path, REPO)
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Attribute) and node.attr == "builder"
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id == "SparkSession"):
+                builders.append(rel)
+            if (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                    and "extraJavaOptions" in node.value):
+                java_opts.append((rel, node.lineno))
+    assert builders == [
+        os.path.join("self_healing_data_pipeline_agent_spark", "session.py")
+    ], builders
+    assert java_opts == [], java_opts
+
+
 def test_bench_result_line_queries_survive_tail_truncation():
     """The driver archives only the LAST 2000 chars of bench.py's JSON
     line (BENCH_r04.json lost the Spark per-query dict to head
