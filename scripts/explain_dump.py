@@ -2,13 +2,15 @@
 and (optionally) noop-sink timings for named queries.
 
 Usage:
-    python scripts/explain_dump.py TAG [--time N] [--sf DIR] name...
+    python scripts/explain_dump.py ROUND TAG [--time N] [--sf DIR] name...
 
-Writes ``plans/r<ROUND>/<name>_<TAG>.txt`` for each query (the judge
-checks plan claims against these committed files) and, with ``--time N``,
+Writes ``plans/<ROUND>/<name>_<TAG>.txt`` for each query (plan claims
+are checked against these committed files) and, with ``--time N``,
 runs each query N times into the noop sink (guide §1.4: full execution of
-every column, no collect overhead) printing per-run seconds — the same
-timing methodology as bench.py, so isolated numbers are comparable.
+every column, no collect overhead) printing per-run seconds, the host's
+CPU count and the cores Spark used — the same timing methodology as
+bench.py, so isolated numbers are comparable.  The session runs
+``local[$SPARK_GRAFT_CPUS]``, as ``session.get_spark`` sizes it.
 
 Serve-family queries get one untimed warmup call first (their first call
 may build+persist the index artifact; the steady serving cost is what a
@@ -24,12 +26,12 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-ROUND = "r17"
-
 
 def main() -> None:
     args = [a for a in sys.argv[1:]]
-    tag = args.pop(0)
+    if len(args) < 2:
+        sys.exit(__doc__)
+    round_name, tag = args.pop(0), args.pop(0)
     n_time = 0
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     names: list[str] = []
@@ -45,12 +47,12 @@ def main() -> None:
     from self_healing_data_pipeline_agent_spark.registry import all_queries
     from self_healing_data_pipeline_agent_spark.session import get_spark
 
-    cpus = min(int(os.environ.get("SPARK_GRAFT_CPUS", "16")), 16)
-    spark = get_spark(app_name="explain-dump", master=f"local[{cpus}]",
-                      shuffle_partitions=cpus)
+    spark = get_spark(app_name="explain-dump")
     spark.sparkContext.setLogLevel("ERROR")
+    host_cpus = len(os.sched_getaffinity(0))
+    cores = spark.sparkContext.defaultParallelism
     queries = all_queries()
-    outdir = os.path.join(REPO, "plans", ROUND)
+    outdir = os.path.join(REPO, "plans", round_name)
     os.makedirs(outdir, exist_ok=True)
     for name in names:
         fn = queries[name]
@@ -72,7 +74,8 @@ def main() -> None:
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 runs.append(round(time.perf_counter() - t0, 3))
             spark.sparkContext.setJobDescription(None)
-            print(f"{name}: {runs} min={min(runs)}")
+            print(f"{name}: {runs} min={min(runs)} "
+                  f"host_nproc={host_cpus} cores={cores}")
     spark.stop()
 
 

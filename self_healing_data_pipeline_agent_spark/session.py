@@ -7,6 +7,21 @@ shuffle-partition count that AQE is free to shrink.  The generated-class
 cache is pinned above every measured working set, so warm passes reuse
 compiled classes instead of re-running janino and the JIT on each one.
 
+Python tasks run under this package's daemon, ``worker_daemon``, pinned
+as ``spark.python.daemon.module`` (static, like the codegen cache).
+Spark calls ``importlib.invalidate_caches()`` on every Python task, and
+on CPython 3.11 each of a worker's 14 zipimporters then re-reads the
+1,328-entry directory of ``pyspark.zip``: 70-145 ms of CPU per task on
+a 4-vCPU host, before the task's code runs.  The daemon's importers
+re-read a zip only when the file changed.  The conf is set only when the
+daemon can import this package at start: on a ``local`` master, when
+the package's parent directory is the JVM's working directory (the
+daemon inherits it, and ``python -m`` puts it first on the path) or an
+entry of its ``PYTHONPATH``.  A JVM not yet running inherits both from
+this process.  A package that only ``sys.path`` or ``addPyFile`` makes
+importable, and every cluster master, keeps Spark's own daemon: a daemon
+that cannot import its module fails every Python UDF.
+
 The driver JVM starts from a class-data archive (JDK AppCDS, the dynamic
 archive of JEP 350): a new process maps Spark's classes from one file
 instead of loading and verifying them from the jars again, which cuts
@@ -63,14 +78,14 @@ def get_spark(
 
     At cluster scale the same confs apply; only ``master`` changes.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     # 31g, not 32g: from 32g up the JVM turns compressed oops off, so
     # every reference takes 8 bytes and the class archive needs a second
     # copy.
     heap = os.environ.get("SPARK_DRIVER_MEMORY", "31g")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
@@ -119,6 +134,9 @@ def get_spark(
         # trigger GC churn mid-query (measurably stabilizes bench times).
         .config("spark.driver.memory", heap)
     )
+    # Python workers that keep zip directories across tasks (module docstring).
+    if _daemon_can_import_package(master):
+        builder = builder.config("spark.python.daemon.module", _DAEMON_MODULE)
     extra_conf = extra_conf or {}
     launch = _archive_launch(extra_conf.get("spark.driver.memory", heap))
     if launch is not None:
@@ -142,6 +160,31 @@ def get_spark(
             launch.prefix, os.getpid(),
         )
     return spark
+
+
+_DAEMON_MODULE = f"{__package__}.worker_daemon"
+
+
+def _daemon_can_import_package(master: str) -> bool:
+    """Whether the Python daemon a local session starts can import this
+    package before any task ships files: its parent directory is the
+    JVM's working directory (the daemon inherits it, and ``python -m``
+    puts it first on the path) or an entry of the JVM's ``PYTHONPATH``.
+    A JVM that is not running yet inherits both from this process."""
+    if not re.fullmatch(r"local(\[[^\]]*\])?", master):
+        return False  # executors start daemons in their own cwd and env
+    if SparkContext._jvm is not None:
+        system = SparkContext._jvm.java.lang.System
+        cwd, getenv = system.getProperty("user.dir"), system.getenv
+    elif "PYSPARK_GATEWAY_PORT" in os.environ:
+        return False  # a JVM started elsewhere, with a cwd not seen here
+    else:
+        cwd, getenv = os.getcwd(), os.environ.get
+    dirs = [d for d in (getenv("PYTHONPATH") or "").split(os.pathsep) if d]
+    if not getenv("PYTHONSAFEPATH"):  # else -m adds no cwd entry
+        dirs.append(cwd)
+    parent = os.path.realpath(os.path.dirname(os.path.dirname(__file__)))
+    return any(os.path.realpath(os.path.join(cwd, d)) == parent for d in dirs)
 
 
 # Every archive launch silences CDS logging: the JVM writes it to stdout,
